@@ -26,8 +26,8 @@ def _spark(app: str) -> SparkSession:
 
 
 def _read_reads(spark: SparkSession, path: str):
-    """Alignment input dispatch: .bam decodes through the native codec,
-    .cram through pysam, anything else is a parquet alignment relation."""
+    """Alignment input dispatch: .bam and .cram decode through the native
+    codecs (read_bam), anything else is a parquet alignment relation."""
     from sequila_spark.sources import read_alignments, read_bam
 
     if path.endswith((".bam", ".cram")):

@@ -178,6 +178,11 @@ def coverage_blocks_walks(
 
     ``walks`` maps output tag -> use_cigar.  Every stage carries a tinyint
     walk id; the name attaches in the final projection.
+
+    A CIGAR walk reads the ``cigar`` column and ignores a precomputed
+    ``__blocks`` column (unlike aligned_blocks).  It skips a read whose
+    cigar is NULL, so only the span walks cover that read; on a relation
+    without a ``cigar`` column every walk is a span walk.
     """
     names = [n for n, _ in walks]
     arrays = []

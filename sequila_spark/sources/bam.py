@@ -9,13 +9,18 @@ alignment relations with the canonical schema; BAM decoding is an I/O shim:
    columnar, partition-prunable by sample_id/contig, row-group skippable on
    (contig, pos_start) when sorted).  Equivalent to the reference's
    interval/sample pushdown (§2.2) falling out of parquet for free.
- - ``read_bam``/``read_cram``: decode via pysam when available (executor-side
-   ``mapPartitions`` over BGZF chunk ranges), else raise with guidance.  The
-   pysam path partitions by contig ranges, one iterator per partition.
+ - ``read_bam_native``/``read_cram_native``: decode with the native codecs
+   (sources/bamcodec, bamvec, cramcodec), one task per BAI genomic chunk
+   or CRAM container group; ``read_bam`` dispatches on the extension.
+ - ``read_bam_coverage_events``/``read_cram_coverage_events``: the fused
+   decode->coverage-events readers, planned by the same helpers as the
+   row readers (_plan_bam_spans, _plan_cram_groups) so both read exactly
+   the same records.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -83,42 +88,12 @@ def read_alignments(
     return with_typed_tags(df) if typed_tags and "tags" in df.columns else df
 
 
-def _pysam_reader(path: str, ref_path: str | None, contig: str, start: int, end: int):
-    """Yield reads OWNED by the half-open chunk [start, end): pysam fetch
-    returns every read overlapping the range, so a read spanning two chunks
-    would be emitted by both tasks — each read is kept only by the chunk
-    containing its reference_start (owner-by-start rule; the reference
-    assigns each read to exactly one split,
-    datasources/BAM/AlignmentRelation.scala:298-393)."""
-    import pysam  # noqa: F401 — gated import
-
-    mode = "rc" if path.endswith(".cram") else "rb"
-    kwargs = {"reference_filename": ref_path} if ref_path else {}
-    with pysam.AlignmentFile(path, mode, **kwargs) as af:
-        for read in af.fetch(contig, start, end):
-            if not (start <= (read.reference_start or 0) < end):
-                continue
-            yield (
-                read.query_name,
-                read.flag,
-                read.reference_name,
-                (read.reference_start or 0) + 1,
-                read.reference_end or 0,
-                read.mapping_quality,
-                read.cigarstring,
-                read.query_sequence,
-                read.qual if hasattr(read, "qual") else None,
-            )
-
-
 def list_samples(path: str) -> list[str]:
     """DISTINCT sample_id WITHOUT reading any data — the reference's scan
     elision (SequilaDataSourceStrategy.scala:38-54, TableFuncs.scala:39-49
     answer it from file names).  Works on BAM globs/directories (file-name
     stems) and on write_alignments parquet stores (sample_id=... partition
     directories)."""
-    import glob as _glob
-
     if os.path.isdir(path):
         parts = sorted(
             e.split("=", 1)[1]
@@ -127,11 +102,10 @@ def list_samples(path: str) -> list[str]:
         )
         if parts:
             return parts
-        files = sorted(_glob.glob(os.path.join(path, "*.bam")))
-    elif any(ch in path for ch in "*?["):
-        files = sorted(_glob.glob(path))
-    else:
-        files = [path]
+    try:
+        files = _expand_paths(path, ".bam")
+    except FileNotFoundError:
+        return []
     return sorted({os.path.basename(p).split(".")[0] for p in files})
 
 
@@ -386,6 +360,79 @@ def write_bam(
         fragments.unpersist()
 
 
+def _expand_paths(path: str | list[str], ext: str) -> list[str]:
+    """Reader input -> file paths: a list as given, a directory's
+    ``*<ext>`` files, a glob's matches, or the single path.  Raises
+    FileNotFoundError when nothing matches."""
+    if isinstance(path, (list, tuple)):
+        paths = list(path)
+    elif os.path.isdir(path):
+        paths = sorted(glob.glob(os.path.join(path, "*" + ext)))
+    elif any(ch in path for ch in "*?["):
+        paths = sorted(glob.glob(path))
+    else:
+        paths = [path]
+    if not paths:
+        raise FileNotFoundError(f"no {ext[1:].upper()} files match {path!r}")
+    return paths
+
+
+def _plan_bam_spans(
+    path: str | list[str], chunk: int
+) -> tuple[dict[str, list[tuple[str, int]]], list[tuple]]:
+    """Driver-side planning shared by both BAM readers: headers + BAIs only
+    -> (refs_by_path, spans), each span ``(path, sample, span)`` in the
+    bamcodec.open_span model.  An indexed file gets one owner-by-start
+    span per BAI genomic chunk, then its trailing no-coordinate region; a
+    file without a .bai is one whole-file span."""
+    from sequila_spark.sources import bamcodec as B
+
+    refs_by_path: dict[str, list[tuple[str, int]]] = {}
+    spans: list[tuple] = []
+    for p in _expand_paths(path, ".bam"):
+        with open(p, "rb") as f:
+            refs_by_path[p], _ = B.read_bam_header(B.BgzfReader(f))
+        sample = os.path.basename(p).split(".")[0]
+        bai = next(
+            (c for c in (p + ".bai", p[: p.rfind(".")] + ".bai") if os.path.exists(c)),
+            None,
+        )
+        if not bai:
+            spans.append((p, sample, None))
+            continue
+        linear, n_no_coor = B.read_bai(bai)
+        for sp in B.plan_spans(refs_by_path[p], linear, chunk):
+            spans.append((p, sample, sp))
+        # Trailing no-coordinate region: a sorted BAM stores records with
+        # ref_id -1 after every mapped record, a region the per-reference
+        # spans never reach — without this span an indexed file would
+        # silently drop reads the unindexed single-task path yields.  Scan
+        # from the last indexed virtual offset, keeping only ref_id < 0
+        # records (mapped records seen on the way are owned by their
+        # mapped span).  Skipped only when the index states n_no_coor == 0.
+        if n_no_coor is None or n_no_coor > 0:
+            last_voff = max((v for il in linear for v in il if v), default=0)
+            spans.append((p, sample, ("__unmapped__", last_voff)))
+    return refs_by_path, spans
+
+
+def _one_task_per_item(
+    spark: SparkSession, n: int, decode, schema_str: str
+) -> DataFrame:
+    """mapInArrow over ``range(n)`` split into exactly n partitions: task
+    ``i`` yields ``decode(i)``'s RecordBatches (one span / container group
+    per task).  ``n == 0`` is an empty relation."""
+    if not n:
+        return spark.createDataFrame([], schema_str)
+
+    def gen_batches(batches):
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                yield from decode(i)
+
+    return spark.range(0, n, 1, n).mapInArrow(gen_batches, schema_str)
+
+
 def read_bam_native(
     spark: SparkSession,
     path: str | list[str],
@@ -448,48 +495,9 @@ def read_bam_native(
     disables that filtering — include them whenever reads feed a filtered
     operator.  ``typed_tags=True`` with a ``columns`` list that omits
     ``'tags'`` is rejected here (it would fail at plan time otherwise)."""
-    import glob as _glob
-
     from sequila_spark.sources import bamcodec as B
 
-    if isinstance(path, (list, tuple)):
-        paths = list(path)
-    elif os.path.isdir(path):
-        paths = sorted(_glob.glob(os.path.join(path, "*.bam")))
-    elif any(ch in path for ch in "*?["):
-        paths = sorted(_glob.glob(path))
-    else:
-        paths = [path]
-    if not paths:
-        raise FileNotFoundError(f"no BAM files match {path!r}")
-
-    refs_by_path: dict[str, list[tuple[str, int]]] = {}
-    spans: list[tuple] = []  # (path, sample, span-or-None)
-    for p in paths:
-        with open(p, "rb") as f:
-            refs_by_path[p], _ = B.read_bam_header(B.BgzfReader(f))
-        sample = os.path.basename(p).split(".")[0]
-        bai = next(
-            (c for c in (p + ".bai", p[: p.rfind(".")] + ".bai") if os.path.exists(c)),
-            None,
-        )
-        if bai:
-            linear, n_no_coor = B.read_bai(bai)
-            for sp in B.plan_spans(refs_by_path[p], linear, chunk):
-                spans.append((p, sample, sp))
-            # Trailing no-coordinate region: a sorted BAM stores records
-            # with ref_id -1 after every mapped record, a region the
-            # per-reference spans never reach — without this span an
-            # indexed file would silently drop reads the unindexed
-            # single-task path yields.  Scan from the last indexed virtual
-            # offset, keeping only ref_id < 0 records (mapped records seen
-            # on the way are owned by their mapped span).  Skipped only
-            # when the index states n_no_coor == 0.
-            if n_no_coor is None or n_no_coor > 0:
-                last_voff = max((v for il in linear for v in il if v), default=0)
-                spans.append((p, sample, ("__unmapped__", last_voff)))
-        else:
-            spans.append((p, sample, None))
+    refs_by_path, spans = _plan_bam_spans(path, chunk)
 
     _COL_TYPES = {
         S.SAMPLE: "string", S.QNAME: "string", S.FLAG: "int",
@@ -522,31 +530,23 @@ def read_bam_native(
         schema_str += ", __ord long"
 
     if arrow:
-        if not spans:
-            df = spark.createDataFrame([], schema_str)
-        else:
-            def gen_batches(batches):
-                from sequila_spark.sources import bamvec as BV
+        def decode(sid):
+            from sequila_spark.sources import bamvec as BV
 
-                for b in batches:
-                    for sid in b.column(0).to_pylist():
-                        p, sample, span = spans[sid]
-                        yield from BV.iter_span_batches(
-                            p,
-                            refs_by_path[p],
-                            sample,
-                            span,
-                            span_idx=sid,
-                            with_tags=with_tags,
-                            with_ordinal=with_ordinal,
-                            columns=keep if columns is not None else None,
-                            with_blocks=with_blocks,
-                        )
-
-            # one span per task: range(n) split into exactly n partitions
-            df = spark.range(0, len(spans), 1, len(spans)).mapInArrow(
-                gen_batches, schema_str
+            p, sample, span = spans[sid]
+            return BV.iter_span_batches(
+                p,
+                refs_by_path[p],
+                sample,
+                span,
+                span_idx=sid,
+                with_tags=with_tags,
+                with_ordinal=with_ordinal,
+                columns=keep if columns is not None else None,
+                with_blocks=with_blocks,
             )
+
+        df = _one_task_per_item(spark, len(spans), decode, schema_str)
         if S.CONTIG in keep:
             df = df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
         out = with_typed_tags(df) if typed_tags else df
@@ -557,28 +557,13 @@ def read_bam_native(
 
     def gen(task):
         span_idx, (p, sample, span) = task
-        refs = refs_by_path[p]
         with open(p, "rb") as fh:
-            if span is None:
-                st = B.BgzfReader(fh)
-                B.read_bam_header(st)  # skip to records
-                it = B.parse_records(st, refs, with_tags=with_tags)
-            elif span[0] == "__unmapped__":
-                voff = span[1]
-                if voff:
-                    st = B.BgzfReader(fh, voff)
-                else:  # index exists but no mapped reads: scan from header
-                    st = B.BgzfReader(fh)
-                    B.read_bam_header(st)
-                it = B.parse_records(
-                    st, refs, with_tags=with_tags, unmapped_only=True
-                )
-            else:
-                rid, s0, e0, voff = span
-                st = B.BgzfReader(fh, voff)
-                it = B.parse_records(
-                    st, refs, ref_id=rid, start0=s0, end0=e0, with_tags=with_tags
-                )
+            st, region, unmapped_only = B.open_span(fh, span)
+            ref_id, start0, end0 = region or (None, 0, None)
+            it = B.parse_records(
+                st, refs_by_path[p], ref_id=ref_id, start0=start0, end0=end0,
+                with_tags=with_tags, unmapped_only=unmapped_only,
+            )
             if with_ordinal:
                 base_ord = span_idx << 32
                 for i, rec in enumerate(it):
@@ -645,67 +630,33 @@ def read_bam_coverage_events(
     ``coverage(read_bam_native(..., with_blocks=True), chunk_size=...)``
     while shuffling ~10x fewer rows and rendering zero strings: the
     per-read columns never leave the decode task, the way the reference
-    fuses coverage into its scan partitions (pileup/PileupStrategy.scala)
-    — here as an opt-in reader, with the declarative operator unchanged
-    for alignment-shaped relations.  ``flag_mask``/``min_mapq`` apply
-    filter_reads' predicates at decode time (pass 1796 for the
-    reference's default read filter).  Span planning (BAI genomic chunks,
-    owner-by-start) is identical to read_bam_native."""
-    import glob as _glob
+    fuses coverage into its scan partitions (pileup/PileupStrategy.scala);
+    ``coverage()`` routes an untransformed read_bam_native relation here
+    automatically.  ``flag_mask``/``min_mapq`` apply filter_reads'
+    predicates at decode time (pass 1796 for the reference's default read
+    filter).  Span planning is read_bam_native's (_plan_bam_spans), minus
+    the trailing no-coordinate span: unmapped records carry no aligned
+    blocks, so that span would be a task that emits nothing."""
+    refs_by_path, spans = _plan_bam_spans(path, chunk)
+    spans = [s for s in spans if s[2] is None or s[2][0] != "__unmapped__"]
 
-    from sequila_spark.sources import bamcodec as B
-
-    if isinstance(path, (list, tuple)):
-        paths = list(path)
-    elif os.path.isdir(path):
-        paths = sorted(_glob.glob(os.path.join(path, "*.bam")))
-    elif any(ch in path for ch in "*?["):
-        paths = sorted(_glob.glob(path))
-    else:
-        paths = [path]
-    if not paths:
-        raise FileNotFoundError(f"no BAM files match {path!r}")
-
-    refs_by_path: dict[str, list[tuple[str, int]]] = {}
-    spans: list[tuple] = []
-    for p in paths:
-        with open(p, "rb") as f:
-            refs_by_path[p], _ = B.read_bam_header(B.BgzfReader(f))
-        bai = next(
-            (c for c in (p + ".bai", p[: p.rfind(".")] + ".bai") if os.path.exists(c)),
-            None,
-        )
-        if bai:
-            linear, _ = B.read_bai(bai)
-            for sp in B.plan_spans(refs_by_path[p], linear, chunk):
-                spans.append((p, sp))
-        else:
-            spans.append((p, None))
-
-    schema_str = "contig string, chunk long, pos int, delta int"
-    if not spans:
-        return spark.createDataFrame([], schema_str)
-
-    def gen_batches(batches):
+    def decode(sid):
         from sequila_spark.sources import bamvec as BV
 
-        for b in batches:
-            for sid in b.column(0).to_pylist():
-                p, span = spans[sid]
-                yield from BV.iter_span_cov_events(
-                    p,
-                    refs_by_path[p],
-                    span,
-                    chunk_size=chunk_size,
-                    flag_mask=flag_mask,
-                    min_mapq=min_mapq,
-                )
+        p, _sample, span = spans[sid]
+        return BV.iter_span_cov_events(
+            p,
+            refs_by_path[p],
+            span,
+            chunk_size=chunk_size,
+            flag_mask=flag_mask,
+            min_mapq=min_mapq,
+        )
 
-    df = spark.range(0, len(spans), 1, len(spans)).mapInArrow(
-        gen_batches, schema_str
+    df = _one_task_per_item(
+        spark, len(spans), decode, "contig string, chunk long, pos int, delta int"
     )
     return df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
-
 
 #: (path, size, mtime_ns) -> (ref_names, rg_names, containers, validated)
 #: — the CRAM planning scan + per-container codec validation are pure
@@ -799,6 +750,66 @@ def plan_cram_containers(
     return ref_names, rg_names, containers
 
 
+def _plan_cram_groups(
+    spark: SparkSession,
+    path: str | list[str],
+    contig: str | None,
+    start: int | None,
+    end: int | None,
+) -> tuple[dict[str, tuple[list[str], list[str]]], list[list[tuple]]]:
+    """Driver-side planning shared by both CRAM readers -> (meta_by_path,
+    groups): ``meta_by_path[p] = (ref_names, rg_names)``, and each group a
+    list of ``(path, sample, container header)`` decoded by one task.
+
+    Containers are interval-pruned (plan_cram_containers) and validated
+    here, so a codec outside the native set raises NotImplementedError at
+    plan time, before any task runs (memoized per file stat).
+
+    A group is a contiguous run of containers packed to a byte target, not
+    one container: real containers are ~1 MB and a Python runner costs
+    ~0.2-0.3 s per task (worker spin-up + imports), so one task per
+    container is ~10x overhead at any scale (and 100M tasks at 100 TB).
+    The target adapts downward so small inputs still fill the cluster
+    (2 waves per core when possible)."""
+    meta_by_path: dict[str, tuple[list[str], list[str]]] = {}
+    tasks: list[tuple[str, str, dict]] = []
+    for p in _expand_paths(path, ".cram"):
+        ref_names, rg_names, containers = plan_cram_containers(
+            p, contig=contig, start=start, end=end
+        )
+        _validate_containers_cached(p, containers)
+        meta_by_path[p] = (ref_names, rg_names)
+        sample = os.path.basename(p).split(".")[0]
+        tasks += [(p, sample, h) for h in containers]
+
+    par = spark.sparkContext.defaultParallelism or 1
+    total_bytes = sum(h["length"] for _p, _s, h in tasks)
+    target = max(1, min(32 << 20, total_bytes // max(1, 2 * par)))
+    groups: list[list[tuple]] = []
+    cur: list[tuple] = []
+    cur_bytes = 0
+    for t in tasks:
+        cur.append(t)
+        cur_bytes += t[2]["length"]
+        if cur_bytes >= target:
+            groups.append(cur)
+            cur, cur_bytes = [], 0
+    if cur:
+        groups.append(cur)
+    return meta_by_path, groups
+
+
+def _container_blobs(group: list[tuple]):
+    """Yield ``(path, sample, blob, header)`` for each container of one
+    task's group: the container's bytes read by offset, and its header
+    rebased onto that blob (decode_container_columns' input)."""
+    for p, sample, h in group:
+        with open(p, "rb") as f:
+            f.seek(h["abs_data_offset"])
+            blob = f.read(h["length"])
+        yield p, sample, blob, dict(h, data_offset=0)
+
+
 def read_cram_native(
     spark: SparkSession,
     path: str | list[str],
@@ -832,7 +843,7 @@ def read_cram_native(
     RR=false).  Files using codecs outside the implemented set raise
     NotImplementedError AT PLAN TIME (every planned container's compression
     and slice headers are validated driver-side — a cheap, data-block-free
-    pass) so read_bam's pysam fallback engages before any executor work.
+    pass), before any executor work.
 
     I/O model: planning reads container headers only (O(containers), not
     O(file size)); each task seeks to its container's byte range and reads
@@ -852,33 +863,9 @@ def read_cram_native(
     columns not requested, and only the requested Arrow arrays ship to
     the JVM.  sample_id is always included; an interval filter requires
     contig/pos_start/pos_end to be present."""
-    import glob as _glob
-
     from sequila_spark.sources import cramcodec as C
 
-    if isinstance(path, (list, tuple)):
-        paths = list(path)
-    elif os.path.isdir(path):
-        paths = sorted(_glob.glob(os.path.join(path, "*.cram")))
-    elif any(ch in path for ch in "*?["):
-        paths = sorted(_glob.glob(path))
-    else:
-        paths = [path]
-    if not paths:
-        raise FileNotFoundError(f"no CRAM files match {path!r}")
-
-    meta_by_path: dict[str, tuple[list[str], list[str]]] = {}
-    tasks: list[tuple[str, str, dict]] = []
-    for p in paths:
-        ref_names, rg_names, containers = plan_cram_containers(
-            p, contig=contig, start=start, end=end
-        )
-        meta_by_path[p] = (ref_names, rg_names)
-        sample = os.path.basename(p).split(".")[0]
-        # NotImplementedError -> pysam fallback; memoized per file stat
-        _validate_containers_cached(p, containers)
-        for h in containers:
-            tasks.append((p, sample, h))
+    meta_by_path, groups = _plan_cram_groups(spark, path, contig, start, end)
     bref = (
         spark.sparkContext.broadcast(C.load_fasta(ref_path)) if ref_path else None
     )
@@ -911,30 +898,8 @@ def read_cram_native(
     )
     names = [S.SAMPLE] + keep + (["tags"] if keep_tags else [])
 
-    # Partition = a contiguous GROUP of containers packed to a byte
-    # target, not one container: real containers are ~1 MB and a Python
-    # runner costs ~0.2-0.3 s per task (worker spin-up + imports), so
-    # one-task-per-container is ~10x overhead at any scale (and 100M
-    # tasks at 100 TB).  The target adapts downward so small inputs
-    # still fill the cluster (2 waves per core when possible).
-    par = spark.sparkContext.defaultParallelism or 1
-    total_bytes = sum(t[2]["length"] for t in tasks)
-    target = max(1, min(32 << 20, total_bytes // max(1, 2 * par)))
-    groups: list[list[int]] = []
-    cur: list[int] = []
-    cur_bytes = 0
-    for ti, t in enumerate(tasks):
-        cur.append(ti)
-        cur_bytes += t[2]["length"]
-        if cur_bytes >= target:
-            groups.append(cur)
-            cur, cur_bytes = [], 0
-    if cur:
-        groups.append(cur)
-
-    def gen_batches(batches):
-        """mapInArrow task body: one contiguous container GROUP per task
-        id, columnar decode straight into Arrow RecordBatches (no
+    def decode(gid):
+        """One container group -> Arrow RecordBatches, columnar (no
         per-row pickle — the same transfer model as the vectorized BAM
         reader)."""
         import pyarrow as pa
@@ -944,40 +909,28 @@ def read_cram_native(
         s = pa.string()
         i32 = pa.int32()
         mtype = pa.map_(pa.string(), pa.string())
-        for b in batches:
-            for gid in b.column(0).to_pylist():
-                for tid in groups[gid]:
-                    p, sample, h = tasks[tid]
-                    ref_names, rg_names = meta_by_path[p]
-                    with open(p, "rb") as f:
-                        f.seek(h["abs_data_offset"])
-                        blob = f.read(h["length"])
-                    hh = dict(h, data_offset=0)
-                    refs = bref.value if bref is not None else None
-                    for cols in CC.decode_container_columns(
-                        blob, hh, ref_names, refs, rg_names=rg_names,
-                        columns=decode_cols,
-                    ):
-                        n = len(cols["flag"])
-                        arrays = [pa.array([sample] * n, s)] + [
-                            pa.array(cols[c], i32 if c in _INT else s)
-                            for c in keep
-                        ]
-                        if keep_tags:
-                            tag_items = (
-                                [list(d.items()) for d in cols["tags"]]
-                                if with_tags
-                                else [[]] * n
-                            )
-                            arrays.append(pa.array(tag_items, mtype))
-                        yield pa.RecordBatch.from_arrays(arrays, names=names)
+        refs = bref.value if bref is not None else None
+        for p, sample, blob, hh in _container_blobs(groups[gid]):
+            ref_names, rg_names = meta_by_path[p]
+            for cols in CC.decode_container_columns(
+                blob, hh, ref_names, refs, rg_names=rg_names,
+                columns=decode_cols,
+            ):
+                n = len(cols["flag"])
+                arrays = [pa.array([sample] * n, s)] + [
+                    pa.array(cols[c], i32 if c in _INT else s)
+                    for c in keep
+                ]
+                if keep_tags:
+                    tag_items = (
+                        [list(d.items()) for d in cols["tags"]]
+                        if with_tags
+                        else [[]] * n
+                    )
+                    arrays.append(pa.array(tag_items, mtype))
+                yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    if not tasks:
-        df = spark.createDataFrame([], schema_str)
-    else:
-        df = spark.range(0, len(groups), 1, len(groups)).mapInArrow(
-            gen_batches, schema_str
-        )
+    df = _one_task_per_item(spark, len(groups), decode, schema_str)
     if S.CONTIG in keep:
         df = df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
     if contig is not None:
@@ -1030,63 +983,21 @@ def read_cram_coverage_events(
     and are parsed from their cigar strings — identical events either way.
 
     Planning (container-header scan, interval pruning, byte-targeted
-    container groups) is identical to read_cram_native; an interval also
+    container groups) is read_cram_native's (_plan_cram_groups); an interval also
     applies the htslib-fetch overlap row filter.  ``flag_mask`` /
     ``min_mapq`` apply filter_reads' predicates at decode time."""
-    import glob as _glob
-
     from sequila_spark.functions.intervals import clean_contig_py
     from sequila_spark.sources import cramcodec as C
 
-    if isinstance(path, (list, tuple)):
-        paths = list(path)
-    elif os.path.isdir(path):
-        paths = sorted(_glob.glob(os.path.join(path, "*.cram")))
-    elif any(ch in path for ch in "*?["):
-        paths = sorted(_glob.glob(path))
-    else:
-        paths = [path]
-    if not paths:
-        raise FileNotFoundError(f"no CRAM files match {path!r}")
-
-    meta_by_path: dict[str, list[str]] = {}
-    tasks: list[tuple[str, dict]] = []
-    for p in paths:
-        ref_names, _rg, containers = plan_cram_containers(
-            p, contig=contig, start=start, end=end
-        )
-        meta_by_path[p] = ref_names
-        _validate_containers_cached(p, containers)
-        for h in containers:
-            tasks.append((p, h))
+    meta_by_path, groups = _plan_cram_groups(spark, path, contig, start, end)
     bref = (
         spark.sparkContext.broadcast(C.load_fasta(ref_path)) if ref_path else None
     )
-
-    schema_str = "contig string, chunk long, pos int, delta int"
-    if not tasks:
-        return spark.createDataFrame([], schema_str)
-
-    par = spark.sparkContext.defaultParallelism or 1
-    total_bytes = sum(t[1]["length"] for t in tasks)
-    target = max(1, min(32 << 20, total_bytes // max(1, 2 * par)))
-    groups: list[list[int]] = []
-    cur: list[int] = []
-    cur_bytes = 0
-    for ti, t in enumerate(tasks):
-        cur.append(ti)
-        cur_bytes += t[1]["length"]
-        if cur_bytes >= target:
-            groups.append(cur)
-            cur, cur_bytes = [], 0
-    if cur:
-        groups.append(cur)
-
     want_contig = clean_contig_py(contig) if contig is not None else None
     q_start = start if start is not None else 1
     q_end = end if end is not None else 2**62
 
-    def gen_batches(batches):
+    def decode(gid):
         import numpy as np
         import pyarrow as pa
 
@@ -1098,111 +1009,83 @@ def read_cram_coverage_events(
         k1 = ((1 << 31) // chunk_size + 2) * k2
         decode_cols = {"flag", "contig", "pos_start", "mapq", "__cig_raw"}
         ref_take_by_path: dict[str, pa.Array] = {}
-        for b in batches:
-            for gid in b.column(0).to_pylist():
-                for tid in groups[gid]:
-                    p, h = tasks[tid]
-                    ref_names = meta_by_path[p]
-                    take = ref_take_by_path.get(p)
-                    if take is None:
-                        take = pa.array(
-                            [ccp(nm) for nm in ref_names], type=pa.string()
-                        )
-                        ref_take_by_path[p] = take
-                    with open(p, "rb") as f:
-                        f.seek(h["abs_data_offset"])
-                        blob = f.read(h["length"])
-                    hh = dict(h, data_offset=0)
-                    refs = bref.value if bref is not None else None
-                    for cols in CC.decode_container_columns(
-                        blob, hh, ref_names, refs, columns=decode_cols,
-                    ):
-                        raw = cols.get("__cig_raw")
-                        if raw is not None:
-                            buf, co = raw
-                            co = np.asarray(co, dtype=np.int64)
-                            ap = np.asarray(cols["__ap"], dtype=np.int64)
-                            bf = np.asarray(cols["__bf"], dtype=np.int64)
-                            mq = np.asarray(cols["__mapq"], dtype=np.int64)
-                            rid = np.full(
-                                len(ap), int(cols["__s_ref"]), dtype=np.int64
-                            )
-                        else:
-                            # per-record fallback slice (multi-ref, exotic
-                            # layouts): rebuild the text buffer from the
-                            # rendered cigar strings
-                            cigs = [c or "*" for c in cols["cigar"]]
-                            buf = np.frombuffer(
-                                "".join(cigs).encode("ascii"), dtype=np.uint8
-                            )
-                            co = np.zeros(len(cigs) + 1, dtype=np.int64)
-                            np.cumsum(
-                                [len(c) for c in cigs], out=co[1:]
-                            )
-                            ap = np.asarray(cols["pos_start"], dtype=np.int64)
-                            bf = np.asarray(cols["flag"], dtype=np.int64)
-                            mq = np.asarray(
-                                [m if m is not None else 0 for m in cols["mapq"]],
-                                dtype=np.int64,
-                            )
-                            name_to_rid = {
-                                nm: i for i, nm in enumerate(ref_names)
-                            }
-                            rid = np.asarray(
-                                [
-                                    name_to_rid.get(cg, -1)
-                                    if cg is not None
-                                    else -1
-                                    for cg in cols["contig"]
-                                ],
-                                dtype=np.int64,
-                            )
-                        cig_u32, op_cum = BV.cigar_text_to_ops(buf, co)
-                        keep = rid >= 0
-                        if flag_mask:
-                            keep &= (bf & flag_mask) == 0
-                        if min_mapq:
-                            keep &= mq >= min_mapq
-                        if want_contig is not None:
-                            names_ok = np.asarray(
-                                [
-                                    ccp(nm) == want_contig
-                                    for nm in ref_names
-                                ]
-                            )
-                            keep &= np.where(rid >= 0, names_ok[np.maximum(rid, 0)], False)
-                            # per-record ref-consumed length via the
-                            # cumulative-difference trick (robust to
-                            # zero-op records, unlike reduceat)
-                            ref_adv = (
-                                (cig_u32 >> 4).astype(np.int64)
-                                * BV._REF_CONSUME[cig_u32 & 0xF]
-                            )
-                            cum = np.zeros(len(ref_adv) + 1, dtype=np.int64)
-                            np.cumsum(ref_adv, out=cum[1:])
-                            rec_len = cum[op_cum[1:]] - cum[op_cum[:-1]]
-                            rec_end = ap + np.maximum(rec_len - 1, 0)
-                            keep &= (ap <= q_end) & (rec_end >= q_start)
-                        # _blocks_raw expects BAM's 0-based pos; CRAM's
-                        # pos_start is 1-based
-                        bs, be, rec_of, _ = BV._blocks_raw(
-                            cig_u32, op_cum, ap - 1
-                        )
-                        if not len(bs):
-                            continue
-                        bmask = keep[rec_of]
-                        if not bmask.all():
-                            bs, be, rec_of = bs[bmask], be[bmask], rec_of[bmask]
-                        if not len(bs):
-                            continue
-                        batch = BV.events_from_blocks(
-                            bs, be, rid[rec_of], take, chunk_size, k1, k2
-                        )
-                        if batch is not None:
-                            yield batch
+        refs = bref.value if bref is not None else None
+        for p, _sample, blob, hh in _container_blobs(groups[gid]):
+            ref_names = meta_by_path[p][0]
+            take = ref_take_by_path.get(p)
+            if take is None:
+                take = pa.array([ccp(nm) for nm in ref_names], type=pa.string())
+                ref_take_by_path[p] = take
+            for cols in CC.decode_container_columns(
+                blob, hh, ref_names, refs, columns=decode_cols,
+            ):
+                raw = cols.get("__cig_raw")
+                if raw is not None:
+                    buf, co = raw
+                    co = np.asarray(co, dtype=np.int64)
+                    ap = np.asarray(cols["__ap"], dtype=np.int64)
+                    bf = np.asarray(cols["__bf"], dtype=np.int64)
+                    mq = np.asarray(cols["__mapq"], dtype=np.int64)
+                    rid = np.full(len(ap), int(cols["__s_ref"]), dtype=np.int64)
+                else:
+                    # per-record fallback slice (multi-ref, exotic layouts):
+                    # rebuild the text buffer from the rendered cigar strings
+                    cigs = [c or "*" for c in cols["cigar"]]
+                    buf = np.frombuffer(
+                        "".join(cigs).encode("ascii"), dtype=np.uint8
+                    )
+                    co = np.zeros(len(cigs) + 1, dtype=np.int64)
+                    np.cumsum([len(c) for c in cigs], out=co[1:])
+                    ap = np.asarray(cols["pos_start"], dtype=np.int64)
+                    bf = np.asarray(cols["flag"], dtype=np.int64)
+                    mq = np.asarray(
+                        [m if m is not None else 0 for m in cols["mapq"]],
+                        dtype=np.int64,
+                    )
+                    name_to_rid = {nm: i for i, nm in enumerate(ref_names)}
+                    rid = np.asarray(
+                        [
+                            name_to_rid.get(cg, -1) if cg is not None else -1
+                            for cg in cols["contig"]
+                        ],
+                        dtype=np.int64,
+                    )
+                cig_u32, op_cum = BV.cigar_text_to_ops(buf, co)
+                keep = rid >= 0
+                if flag_mask:
+                    keep &= (bf & flag_mask) == 0
+                if min_mapq:
+                    keep &= mq >= min_mapq
+                if want_contig is not None:
+                    names_ok = np.asarray(
+                        [ccp(nm) == want_contig for nm in ref_names]
+                    )
+                    keep &= np.where(rid >= 0, names_ok[np.maximum(rid, 0)], False)
+                    rec_len = BV._segment_sums(
+                        (cig_u32 >> 4).astype(np.int64)
+                        * BV._REF_CONSUME[cig_u32 & 0xF],
+                        op_cum,
+                    )
+                    rec_end = ap + np.maximum(rec_len - 1, 0)
+                    keep &= (ap <= q_end) & (rec_end >= q_start)
+                # _blocks_raw expects BAM's 0-based pos; CRAM's pos_start
+                # is 1-based
+                bs, be, rec_of, _ = BV._blocks_raw(cig_u32, op_cum, ap - 1)
+                if not len(bs):
+                    continue
+                bmask = keep[rec_of]
+                if not bmask.all():
+                    bs, be, rec_of = bs[bmask], be[bmask], rec_of[bmask]
+                if not len(bs):
+                    continue
+                batch = BV.events_from_blocks(
+                    bs, be, rid[rec_of], take, chunk_size, k1, k2
+                )
+                if batch is not None:
+                    yield batch
 
-    return spark.range(0, len(groups), 1, len(groups)).mapInArrow(
-        gen_batches, schema_str
+    return _one_task_per_item(
+        spark, len(groups), decode, "contig string, chunk long, pos int, delta int"
     )
 
 
@@ -1214,9 +1097,10 @@ def read_bam(
     columns: list[str] | None = None,
     with_blocks: bool = False,
 ) -> DataFrame:
-    """Decode BAM/CRAM partitioned by genomic chunk/container.  Plain BAM
-    and CRAM 3.0 go through the native pure-Python codecs; CRAM files using
-    codecs outside the native set fall back to pysam when available.
+    """Decode BAM/CRAM partitioned by genomic chunk/container with the
+    native codecs (read_bam_native / read_cram_native).  A CRAM using codecs
+    outside the native set raises ImportError at call time, pointing at
+    the parquet path (read_alignments).
 
     ``columns``/``with_blocks`` (BAM only) push column pruning and
     aligned-block extraction into the decode itself — see
@@ -1231,34 +1115,8 @@ def read_bam(
         raise ValueError("with_blocks extraction is BAM-only for now")
     try:
         return read_cram_native(spark, path, ref_path=ref_path, columns=columns)
-    except NotImplementedError:
-        pass  # codec outside the native set — try pysam
-    try:
-        import pysam
-    except ImportError as e:
+    except NotImplementedError as e:
         raise ImportError(
-            "this CRAM uses codecs outside the native decoder's set; "
-            "decoding it needs pysam on driver and executors — or "
-            "store alignments as parquet and use read_alignments() instead"
+            "this CRAM uses codecs outside the native decoder's set; store "
+            "alignments as parquet and use read_alignments() instead"
         ) from e
-
-    with pysam.AlignmentFile(path, "rc" if path.endswith(".cram") else "rb") as af:
-        spans = [
-            (name, s, min(s + chunk, length))
-            for name, length in zip(af.references, af.lengths)
-            for s in range(0, length, chunk)
-        ]
-
-    sample = os.path.basename(path).split(".")[0]
-    rdd = spark.sparkContext.parallelize(spans, max(len(spans), 1)).flatMap(
-        lambda span: _pysam_reader(path, ref_path, *span)
-    )
-    df = rdd.toDF(
-        f"{S.QNAME} string, {S.FLAG} int, {S.CONTIG} string, {S.START} int, "
-        f"{S.END} int, {S.MAPQ} int, {S.CIGAR} string, {S.SEQUENCE} string, "
-        f"{S.BASEQ} string"
-    )
-    return df.select(
-        F.lit(sample).alias(S.SAMPLE),
-        "*",
-    ).withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))

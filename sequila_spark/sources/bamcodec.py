@@ -764,3 +764,21 @@ def plan_spans(
                 continue  # no data at/after this chunk
             spans.append((rid, s, e, voff))
     return spans
+
+
+def open_span(fh: BinaryIO, span) -> tuple[BgzfReader, tuple | None, bool]:
+    """Position a BgzfReader on one decode span -> (stream, region,
+    unmapped_only).  The span model shared by both BAM readers:
+    ``None`` = whole file, ``('__unmapped__', voff)`` = trailing
+    no-coordinate region (scanned from the header when ``voff`` is 0),
+    ``(rid, start0, end0, voff)`` = owner-by-start genomic chunk, whose
+    ``region`` is ``(rid, start0, end0)``."""
+    if span is not None and span[0] != "__unmapped__":
+        rid, s0, e0, voff = span
+        return BgzfReader(fh, voff), (rid, s0, e0), False
+    voff = span[1] if span is not None else 0
+    if voff:
+        return BgzfReader(fh, voff), None, True
+    st = BgzfReader(fh)
+    read_bam_header(st)  # skip to the records
+    return st, None, span is not None

@@ -28,6 +28,8 @@ fixtures) and by the unchanged samtools byte-exact pileup golden.
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pyarrow as pa
 
@@ -294,6 +296,7 @@ _ALL_COLS = (
 def _decode_batch(
     data: bytes,
     offs: np.ndarray,
+    h: np.ndarray,
     ref_take: pa.Array,
     nref: int,
     sample: str,
@@ -301,42 +304,16 @@ def _decode_batch(
     with_tags: bool,
     with_ordinal: bool,
     ord_base: int,
-    region: tuple | None,
-    unmapped_only: bool,
     want: frozenset | None = None,
     with_blocks: bool = False,
-) -> tuple[pa.RecordBatch | None, bool]:
-    """Decode the complete records at ``offs`` inside ``data`` into one
-    Arrow RecordBatch (columns in canonical read_bam_native order, minus
-    nothing).  Returns (batch or None, finished) where finished=True means
-    the sorted-scan stop condition fired (region scans only)."""
+) -> pa.RecordBatch:
+    """Decode one framed batch (_iter_span_records: records at ``offs``
+    inside ``data``, fixed headers ``h``) into one Arrow RecordBatch,
+    columns in canonical read_bam_native order."""
     u8 = np.frombuffer(data, dtype=np.uint8)
-    hdr = u8[offs[:, None] + np.arange(36)]
-    h = hdr.view(_HDR_DT).ravel()
     rid = h["rid"].astype(np.int64)
     pos0 = h["pos"].astype(np.int64)
-
-    finished = False
-    if region is not None:
-        ref_id, start0, end0 = region
-        bad = (rid > ref_id) | (rid < 0)
-        if end0 is not None:
-            bad |= (rid == ref_id) & (pos0 >= end0)
-        if bad.any():
-            cut = int(np.argmax(bad))
-            finished = True
-            h, offs, rid, pos0 = h[:cut], offs[:cut], rid[:cut], pos0[:cut]
-        keep = (rid == ref_id) & (pos0 >= start0)
-    elif unmapped_only:
-        keep = rid < 0
-    else:
-        keep = None
-    if keep is not None and not keep.all():
-        h, offs, rid, pos0 = h[keep], offs[keep], rid[keep], pos0[keep]
     n = len(h)
-    if n == 0:
-        return None, finished
-
     if want is None:
         want = frozenset(_ALL_COLS)
 
@@ -351,19 +328,6 @@ def _decode_batch(
     ql_off = sq_off + sq_bytes
     tg_off = ql_off + l_seq
     rec_end = offs + 4 + h["bs"].astype(np.int64)
-    # Field-extent validation BEFORE any gather: the offset scan only
-    # checks block_size, so corrupt inner fields (l_qname=0, negative
-    # l_seq, n_cigar/l_seq overstating the record) would otherwise drive
-    # the C memcpy gather out of bounds (worker crash / foreign-memory
-    # bytes in Arrow buffers) where the scalar parser raises cleanly.
-    bad = (l_qname < 1) | (l_seq < 0) | (tg_off > rec_end)
-    if bad.any():
-        j = int(np.argmax(bad))
-        raise ValueError(
-            f"corrupt BAM record fields at offset {int(offs[j])}: "
-            f"l_qname={int(l_qname[j])} n_cigar={int(n_cigar[j])} "
-            f"l_seq={int(l_seq[j])} exceed block_size"
-        )
 
     out: dict[str, pa.Array] = {}
 
@@ -496,32 +460,104 @@ def _decode_batch(
     if with_ordinal:
         cols.append(pa.array(ord_base + np.arange(n, dtype=np.int64)))
         names.append("__ord")
-    return pa.RecordBatch.from_arrays(cols, names), finished
+    return pa.RecordBatch.from_arrays(cols, names)
 
 
-def _open_span(fh, span):
-    """Position a BgzfReader on one decode span; returns (stream, region,
-    unmapped_only) — the span model shared by read_bam_native/plan_spans:
-    ``None`` = whole file, ``('__unmapped__', voff)`` = trailing
-    no-coordinate region, ``(rid, start0, end0, voff)`` = genomic chunk."""
-    region = None
-    unmapped_only = False
-    if span is None:
-        st = B.BgzfReader(fh)
-        B.read_bam_header(st)
-    elif span[0] == "__unmapped__":
-        voff = span[1]
-        if voff:
-            st = B.BgzfReader(fh, voff)
-        else:
-            st = B.BgzfReader(fh)
-            B.read_bam_header(st)
-        unmapped_only = True
-    else:
-        rid0, s0, e0, voff = span
-        st = B.BgzfReader(fh, voff)
-        region = (rid0, s0, e0)
-    return st, region, unmapped_only
+def _iter_span_records(path: str, span, batch_bytes: int):
+    """Frame the BAM records of one decode span (bamcodec.open_span model)
+    into batches: yields ``(data, offs, h)`` per ~``batch_bytes`` of
+    decompressed records — ``offs`` the offsets of complete records inside
+    ``data``, ``h`` their fixed headers viewed as _HDR_DT.
+
+    A record split across the batch boundary carries over to the next
+    batch; a truncated trailing record ends the scan (parse_records
+    parity).  The owner-by-start region cut is applied here: a genomic
+    chunk keeps the reads starting in [start0, end0) and stops at the
+    first record past it (coordinate-sorted input); the no-coordinate
+    span keeps ref_id < 0 records.  Corrupt framing raises ValueError: a
+    block_size below the 32-byte fixed section, or inner field extents
+    (l_qname, n_cigar, l_seq) overrunning their record — checked before
+    any gather, which would otherwise read out of bounds."""
+    unpack_i4 = struct.Struct("<i").unpack_from
+    use_ck = CK.available()
+    with open(path, "rb") as fh:
+        st, region, unmapped_only = B.open_span(fh, span)
+        carry = b""
+        while True:
+            chunk = st.read(batch_bytes)
+            data = carry + chunk if carry else chunk
+            if not data:
+                return
+            total = len(data)
+            u8 = np.frombuffer(data, dtype=np.uint8)
+            if use_ck:
+                # C kernel: same chain, same corrupt-block guard, ~300x
+                # the Python loop
+                try:
+                    offs, off = CK.scan_offsets(u8, total)
+                except ValueError as exc:
+                    raise ValueError(f"{exc} (file {path})") from None
+            else:
+                limit = total - 4
+                lst = []
+                off = 0
+                while off <= limit:
+                    bs = unpack_i4(data, off)[0]
+                    if bs < 32:
+                        # <= -4 would stall the scan on the same offset
+                        # forever; below 32 would view garbage as a header
+                        raise ValueError(
+                            f"corrupt BAM record at {path}: block_size={bs}"
+                        )
+                    end = off + 4 + bs
+                    if end > total:
+                        break
+                    lst.append(off)
+                    off = end
+                offs = np.asarray(lst, dtype=np.int64)
+            carry = data[off:]
+            finished = False
+            if len(offs):
+                h = u8[offs[:, None] + np.arange(36)].view(_HDR_DT).ravel()
+                rid = h["rid"].astype(np.int64)
+                pos0 = h["pos"].astype(np.int64)
+                keep = None
+                if region is not None:
+                    ref_id, start0, end0 = region
+                    bad = (rid > ref_id) | (rid < 0)
+                    if end0 is not None:
+                        bad |= (rid == ref_id) & (pos0 >= end0)
+                    if bad.any():
+                        cut = int(np.argmax(bad))
+                        finished = True
+                        h, offs, rid, pos0 = h[:cut], offs[:cut], rid[:cut], pos0[:cut]
+                    keep = (rid == ref_id) & (pos0 >= start0)
+                elif unmapped_only:
+                    keep = rid < 0
+                if keep is not None and not keep.all():
+                    h, offs = h[keep], offs[keep]
+                if len(h):
+                    l_qname = h["l_qname"].astype(np.int64)
+                    n_cigar = h["n_cigar"].astype(np.int64)
+                    l_seq = h["l_seq"].astype(np.int64)
+                    fields_end = (
+                        offs + 36 + l_qname + 4 * n_cigar + (l_seq + 1) // 2 + l_seq
+                    )
+                    bad = (
+                        (l_qname < 1)
+                        | (l_seq < 0)
+                        | (fields_end > offs + 4 + h["bs"].astype(np.int64))
+                    )
+                    if bad.any():
+                        j = int(np.argmax(bad))
+                        raise ValueError(
+                            f"corrupt BAM record fields at offset {int(offs[j])}: "
+                            f"l_qname={int(l_qname[j])} n_cigar={int(n_cigar[j])} "
+                            f"l_seq={int(l_seq[j])} exceed block_size"
+                        )
+                    yield data, offs, h
+            if finished or not chunk:
+                return
 
 
 def iter_span_batches(
@@ -538,12 +574,12 @@ def iter_span_batches(
     batch_bytes: int = 8 << 20,
 ):
     """Yield Arrow RecordBatches for one decode span (same span model as
-    read_bam_native / bamcodec.plan_spans): ``None`` = whole file,
+    read_bam_native / bamcodec.open_span): ``None`` = whole file,
     ``('__unmapped__', voff)`` = trailing no-coordinate region,
     ``(rid, start0, end0, voff)`` = owner-by-start genomic chunk.
 
-    Streams ~``batch_bytes`` of decompressed records per batch; a record
-    split across the boundary carries over to the next batch.
+    Streams ~``batch_bytes`` of decompressed records per batch (framing:
+    _iter_span_records).
 
     ``columns`` prunes the decode itself (htsjdk-style lazy fields: a
     skipped column's bytes are never rendered); ``with_blocks`` appends a
@@ -551,80 +587,24 @@ def iter_span_batches(
     from the raw cigar ops — coverage consumers skip the SQL cigar walk."""
     names = [nm for nm, _ in refs]
     ref_take = pa.array(names + [None], type=pa.string())
-    nref = len(names)
     want = frozenset(columns) if columns is not None else None
-
-    with open(path, "rb") as fh:
-        st, region, unmapped_only = _open_span(fh, span)
-
-        import struct as _struct
-
-        carry = b""
-        n_out = 0
-        unpack_i4 = _struct.Struct("<i").unpack_from
-        use_ck = CK.available()
-        while True:
-            chunk = st.read(batch_bytes)
-            data = carry + chunk if carry else chunk
-            if not data:
-                return
-            total = len(data)
-            if use_ck:
-                # C kernel: same chain, same corrupt-block guard, ~300x
-                # the Python loop (the scan was the dominant per-record
-                # Python cost left in this decoder)
-                try:
-                    offs_arr, off = CK.scan_offsets(
-                        np.frombuffer(data, dtype=np.uint8), total
-                    )
-                except ValueError as exc:
-                    raise ValueError(f"{exc} (file {path})") from None
-            else:
-                limit = total - 4
-                offs = []
-                off = 0
-                append = offs.append
-                while off <= limit:
-                    bs = unpack_i4(data, off)[0]
-                    if bs < 32:
-                        # corrupt block_size: <= -4 would stall the scan on
-                        # the same offset forever, and anything below the
-                        # 32-byte fixed section would view garbage as a
-                        # header; mirror the scalar parser's failure instead
-                        # (parse_records raises struct.error on same input)
-                        raise ValueError(
-                            f"corrupt BAM record at {path}: block_size={bs}"
-                        )
-                    end = off + 4 + bs
-                    if end > total:
-                        break
-                    append(off)
-                    off = end
-                offs_arr = np.asarray(offs, dtype=np.int64)
-            carry = data[off:]
-            if len(offs_arr):
-                batch, finished = _decode_batch(
-                    data,
-                    offs_arr,
-                    ref_take,
-                    nref,
-                    sample,
-                    with_tags=with_tags,
-                    with_ordinal=with_ordinal,
-                    ord_base=(span_idx << 32) | n_out,
-                    region=region,
-                    unmapped_only=unmapped_only,
-                    want=want,
-                    with_blocks=with_blocks,
-                )
-                if batch is not None:
-                    n_out += batch.num_rows
-                    yield batch
-                if finished:
-                    return
-            if not chunk:
-                # truncated trailing record: parse_records parity (silent stop)
-                return
+    n_out = 0
+    for data, offs, h in _iter_span_records(path, span, batch_bytes):
+        batch = _decode_batch(
+            data,
+            offs,
+            h,
+            ref_take,
+            len(names),
+            sample,
+            with_tags=with_tags,
+            with_ordinal=with_ordinal,
+            ord_base=(span_idx << 32) | n_out,
+            want=want,
+            with_blocks=with_blocks,
+        )
+        n_out += batch.num_rows
+        yield batch
 
 
 def iter_span_cov_events(
@@ -640,7 +620,7 @@ def iter_span_cov_events(
     """Fused decode -> CLIPPED coverage events, aggregated per batch.
 
     For depth-of-coverage the per-read columns never need to leave the
-    decode task: this generator walks the same span stream as
+    decode task: this generator frames the same span stream as
     iter_span_batches, extracts the M/=/X aligned blocks vectorized
     (_blocks_raw), CLIPS them at ``chunk_size`` boundaries (the
     self-contained-chunk contract of operators/coverage), and aggregates
@@ -649,123 +629,54 @@ def iter_span_cov_events(
     distinct-position delta rows — on deep data an order of magnitude
     fewer rows than the 2-events-per-block explode the SQL path shuffles,
     and zero string rendering.  The reference fuses coverage into its
-    decode partitions the same way (pileup/PileupStrategy.scala); here the
-    fusion is an opt-in reader mode and the declarative coverage()
-    operator remains for any alignment-shaped relation.
+    decode partitions the same way (pileup/PileupStrategy.scala); here
+    ``coverage()`` selects the fusion automatically for an untransformed
+    ``read_bam_native`` relation, and the declarative operator remains for
+    any other alignment-shaped relation.
 
     Emits RecordBatches (contig utf8, chunk int64, pos int32, delta int32);
     operators.coverage.coverage_from_events completes the global
     aggregation (same chunk_size required).  ``flag_mask``/``min_mapq``
     apply filter_reads' predicates at decode time.  Unmapped records
-    carry no cigar ops, so they contribute nothing — identical to the
-    __blocks-based batch path."""
+    (ref_id < 0) contribute nothing — identical to the __blocks-based
+    batch path."""
     if chunk_size < 32 or (1 << 31) // chunk_size + 1 >= (1 << 62) // (
         chunk_size + 2
     ):
         raise ValueError(f"chunk_size {chunk_size} out of range")
-    names = [nm for nm, _ in refs]
-    ref_take = pa.array(names, type=pa.string())
+    ref_take = pa.array([nm for nm, _ in refs], type=pa.string())
     k2 = chunk_size + 2  # local position in [1, chunk_size+1]
     k1 = ((1 << 31) // chunk_size + 2) * k2
-
-    import struct as _struct
-
-    unpack_i4 = _struct.Struct("<i").unpack_from
-    use_ck = CK.available()
-    with open(path, "rb") as fh:
-        st, region, unmapped_only = _open_span(fh, span)
-        if unmapped_only:
-            return  # unmapped records have no aligned blocks
-        carry = b""
-        while True:
-            chunk = st.read(batch_bytes)
-            data = carry + chunk if carry else chunk
-            if not data:
-                return
-            total = len(data)
-            if use_ck:
-                try:
-                    offs, off = CK.scan_offsets(
-                        np.frombuffer(data, dtype=np.uint8), total
-                    )
-                except ValueError as exc:
-                    raise ValueError(f"{exc} (file {path})") from None
-            else:
-                limit = total - 4
-                lst = []
-                off = 0
-                append = lst.append
-                while off <= limit:
-                    bs_ = unpack_i4(data, off)[0]
-                    if bs_ < 32:
-                        raise ValueError(
-                            f"corrupt BAM record at {path}: block_size={bs_}"
-                        )
-                    end = off + 4 + bs_
-                    if end > total:
-                        break
-                    append(off)
-                    off = end
-                offs = np.asarray(lst, dtype=np.int64)
-            carry = data[off:]
-            finished = False
-            if len(offs):
-                u8 = np.frombuffer(data, dtype=np.uint8)
-                hdr = u8[offs[:, None] + np.arange(36)]
-                h = hdr.view(_HDR_DT).ravel()
-                rid = h["rid"].astype(np.int64)
-                pos0 = h["pos"].astype(np.int64)
-                if region is not None:
-                    ref_id, start0, end0 = region
-                    bad = (rid > ref_id) | (rid < 0)
-                    if end0 is not None:
-                        bad |= (rid == ref_id) & (pos0 >= end0)
-                    if bad.any():
-                        cut = int(np.argmax(bad))
-                        finished = True
-                        h, offs, rid, pos0 = h[:cut], offs[:cut], rid[:cut], pos0[:cut]
-                    keep = (rid == ref_id) & (pos0 >= start0)
-                else:
-                    keep = rid >= 0
-                if flag_mask:
-                    keep = keep & ((h["flag"].astype(np.int64) & flag_mask) == 0)
-                if min_mapq:
-                    keep = keep & (h["mapq"].astype(np.int64) >= min_mapq)
-                if not keep.all():
-                    h, offs, rid, pos0 = h[keep], offs[keep], rid[keep], pos0[keep]
-                if len(h):
-                    batch = _cov_event_batch(
-                        u8, h, offs, rid, pos0, ref_take, chunk_size, k1, k2
-                    )
-                    if batch is not None:
-                        yield batch
-            if finished or not chunk:
-                return
+    for data, offs, h in _iter_span_records(path, span, batch_bytes):
+        keep = h["rid"] >= 0
+        if flag_mask:
+            keep &= (h["flag"].astype(np.int64) & flag_mask) == 0
+        if min_mapq:
+            keep &= h["mapq"].astype(np.int64) >= min_mapq
+        if not keep.all():
+            h, offs = h[keep], offs[keep]
+        if len(h):
+            batch = _cov_event_batch(
+                np.frombuffer(data, dtype=np.uint8), h, offs, ref_take,
+                chunk_size, k1, k2,
+            )
+            if batch is not None:
+                yield batch
 
 
 def _cov_event_batch(
-    u8, h, offs, rid, pos0, ref_take, chunk_size, k1, k2
+    u8, h, offs, ref_take, chunk_size, k1, k2
 ) -> pa.RecordBatch | None:
     """One batch's aggregated clipped coverage events (see
     iter_span_cov_events)."""
-    n_cigar = h["n_cigar"].astype(np.int64)
-    l_qname = h["l_qname"].astype(np.int64)
-    cg_off = offs + 36 + l_qname
-    rec_end = offs + 4 + h["bs"].astype(np.int64)
-    bad = (l_qname < 1) | (cg_off + 4 * n_cigar > rec_end)
-    if bad.any():
-        j = int(np.argmax(bad))
-        raise ValueError(
-            f"corrupt BAM record fields at offset {int(offs[j])}: cigar "
-            "extent exceeds block_size"
-        )
-    cg_vals, cg_cum = _ragged_take(u8, cg_off, 4 * n_cigar)
+    cg_off = offs + 36 + h["l_qname"].astype(np.int64)
+    cg_vals, cg_cum = _ragged_take(u8, cg_off, 4 * h["n_cigar"].astype(np.int64))
     cig_u32 = np.ascontiguousarray(cg_vals).view("<u4")
-    bs, be, rec_of, _ = _blocks_raw(cig_u32, cg_cum // 4, pos0)
+    bs, be, rec_of, _ = _blocks_raw(cig_u32, cg_cum // 4, h["pos"].astype(np.int64))
     if not len(bs):
         return None
     return events_from_blocks(
-        bs, be, rid[rec_of], ref_take, chunk_size, k1, k2
+        bs, be, h["rid"].astype(np.int64)[rec_of], ref_take, chunk_size, k1, k2
     )
 
 

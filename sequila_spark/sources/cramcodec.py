@@ -23,9 +23,9 @@ Parity surface: the reference gates CRAM behind disq/htslib
 (datasources/BAM/CRAMDataSource.scala:7-15); here plain CRAM decodes
 natively with the FULL spec §13 core-bitstream codec set — canonical
 Huffman (multi-symbol and 0-bit constant), BETA, GAMMA, GOLOMB,
-GOLOMB_RICE and SUBEXP — and only files using the remaining 3.1 codecs
-above raise NotImplementedError, which callers may catch to fall back to
-pysam.
+GOLOMB_RICE and SUBEXP — and only files using codecs outside the set
+above raise NotImplementedError, which read_bam reports as an error
+pointing at read_alignments().
 
 Scale model mirrors the BAM codec: containers are self-contained decode
 units (their compression header travels with them), so the driver scans
@@ -1575,8 +1575,8 @@ _DS_BYTE = {"FC", "BA", "BS", "QS"}  # byte-typed data series
 class _SeriesMap(dict):
     """Data-series map whose misses raise NotImplementedError (not
     KeyError): a record needing a series the writer did not encode means
-    the file is outside this decoder's supported shape, and read_bam uses
-    that signal to fall back to pysam."""
+    the file is outside this decoder's supported shape, and read_bam turns
+    that signal into an error pointing at read_alignments()."""
 
     def __missing__(self, key):
         raise NotImplementedError(
@@ -1823,8 +1823,8 @@ def validate_container_file(path, h: dict) -> None:
     seek()ed past by their compressed size, never read, so validation I/O
     per container is a few KB regardless of container size.  Raises
     NotImplementedError for compression methods, codecs or slice shapes
-    (embedded reference) outside the implemented set — the signal read_bam
-    uses to fall back to pysam BEFORE any executor work is scheduled.
+    (embedded reference) outside the implemented set — raised BEFORE any
+    executor work is scheduled, so read_bam can report it at call time.
 
     ``path`` may be a file path or an open binary file (read_cram_native
     reuses one handle across all containers)."""

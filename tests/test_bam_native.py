@@ -1,6 +1,5 @@
-"""Native BAM codec: real-file decode, chunk-boundary ownership, and the
-pysam-path owner-by-start rule (monkeypatched pysam — the library is not
-installed here).
+"""Native BAM codec: real-file decode, chunk-boundary ownership, the BAM
+writer and the read_bam dispatch.
 
 Input: the reference project's public test slice
 (src/test/resources/NA12878.slice.bam) — behavior parity target for
@@ -9,8 +8,6 @@ datasources/BAM/AlignmentRelation.scala.  Tests skip if absent.
 
 import os
 import shutil
-import sys
-import types
 
 import pytest
 
@@ -135,51 +132,6 @@ def test_write_bam_roundtrip(spark, tmp_path):
     # coordinate-sorted output
     pos = [r["pos_start"] for r in back.where("contig = '1'").collect()]
     assert pos == sorted(pos)
-
-
-def test_pysam_owner_by_start_rule(monkeypatch):
-    """_pysam_reader must keep only reads whose reference_start falls inside
-    the chunk's half-open range, so a read overlapping two chunks is owned
-    by exactly one."""
-    from sequila_spark.sources.bam import _pysam_reader
-
-    class FakeRead:
-        def __init__(self, name, start):
-            self.query_name = name
-            self.flag = 0
-            self.reference_name = "1"
-            self.reference_start = start          # 0-based, pysam style
-            self.reference_end = start + 100
-            self.mapping_quality = 60
-            self.cigarstring = "100M"
-            self.query_sequence = "A" * 100
-            self.qual = "I" * 100
-
-    READS = [FakeRead("a", 9_950), FakeRead("b", 10_000), FakeRead("c", 10_050)]
-
-    class FakeAF:
-        def __init__(self, path, mode, **kw):
-            pass
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *a):
-            return False
-
-        def fetch(self, contig, start, end):
-            # pysam semantics: every read OVERLAPPING [start, end)
-            return [r for r in READS if r.reference_start + 100 > start and r.reference_start < end]
-
-    fake = types.ModuleType("pysam")
-    fake.AlignmentFile = FakeAF
-    monkeypatch.setitem(sys.modules, "pysam", fake)
-
-    chunk1 = [r[0] for r in _pysam_reader("x.bam", None, "1", 0, 10_000)]
-    chunk2 = [r[0] for r in _pysam_reader("x.bam", None, "1", 10_000, 20_000)]
-    assert chunk1 == ["a"]          # 'b' overlaps chunk1 but starts at its end
-    assert chunk2 == ["b", "c"]     # each read owned by exactly one chunk
-    assert not (set(chunk1) & set(chunk2))
 
 
 def _synth_bam(path, refs, recs, rec_off_out=None):
@@ -327,66 +279,10 @@ def test_write_bam_sharded_roundtrip(spark, tmp_path):
     assert key == sorted(key, key=lambda t: (t[0] is None, t[0] or "", t[1]))
 
 
-def test_cram_path_owner_by_start_and_mode(monkeypatch):
-    """CRAM leg of the pysam shim (bam.py _pysam_reader via read_bam):
-    .cram opens with mode 'rc' + reference_filename forwarded, and chunk
-    ownership follows the same owner-by-start rule as the BAM path — a
-    read overlapping two chunks is yielded by exactly one."""
-    from sequila_spark.sources.bam import _pysam_reader
-
-    opened = []
-
-    class FakeRead:
-        def __init__(self, name, start):
-            self.query_name = name
-            self.flag = 0
-            self.reference_name = "1"
-            self.reference_start = start
-            self.reference_end = start + 100
-            self.mapping_quality = 60
-            self.cigarstring = "100M"
-            self.query_sequence = "A" * 100
-            self.qual = "I" * 100
-
-    READS = [FakeRead("a", 9_950), FakeRead("b", 10_000), FakeRead("c", 10_050)]
-
-    class FakeAF:
-        def __init__(self, path, mode, **kw):
-            opened.append((path, mode, kw))
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *a):
-            return False
-
-        def fetch(self, contig, start, end):
-            return [
-                r for r in READS
-                if r.reference_start + 100 > start and r.reference_start < end
-            ]
-
-    fake = types.ModuleType("pysam")
-    fake.AlignmentFile = FakeAF
-    monkeypatch.setitem(sys.modules, "pysam", fake)
-
-    c1 = [r[0] for r in _pysam_reader("x.cram", "ref.fa", "1", 0, 10_000)]
-    c2 = [r[0] for r in _pysam_reader("x.cram", "ref.fa", "1", 10_000, 20_000)]
-    assert c1 == ["a"] and c2 == ["b", "c"]
-    assert not (set(c1) & set(c2))
-    # CRAM specifics: 'rc' mode and the reference path forwarded to htslib
-    assert all(m == "rc" for _p, m, _k in opened)
-    assert all(k == {"reference_filename": "ref.fa"} for _p, _m, k in opened)
-
-
 def test_read_cram_unsupported_codec_guides(spark, tmp_path, monkeypatch):
     """CRAM 3.0 decodes natively; a file using codecs outside the native
-    set falls back to pysam, and with pysam absent the error must point at
-    the parquet alternative, not crash obscurely."""
-    import importlib
-
-    if importlib.util.find_spec("pysam") is not None:
-        pytest.skip("pysam installed; guidance path not reachable")
+    set must raise an error that points at the parquet alternative, not
+    crash obscurely."""
     from sequila_spark.sources import bam as bam_mod
 
     def boom(*a, **k):

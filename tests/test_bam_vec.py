@@ -47,20 +47,31 @@ def test_whole_file_exact(path):
     assert _vec(path, refs) == [("S",) + r for r in recs]
 
 
-@pytest.mark.skipif(not os.path.exists(SLICE), reason="no reference BAM")
-def test_region_spans_ownership():
+def _slice_inputs(slice_bam):
+    """The reference slice BAM when present, plus its round-trip copy
+    written by write_bam (conftest ``slice_bam``)."""
+    return [p for p in (SLICE,) if os.path.exists(p)] + [slice_bam]
+
+
+def _spans(path, refs, chunk):
+    spans = B.plan_spans(refs, B.read_bai_linear(path + ".bai"), chunk)
+    assert len(spans) > 1, "chunk must split the file into several spans"
+    return spans
+
+
+def test_region_spans_ownership(slice_bam):
     """Chunked region decode reproduces the whole-file mapped multiset
     (owner-by-start), exactly like the scalar span scan."""
     from collections import Counter
 
-    refs, recs = _scalar(SLICE)
-    whole = Counter((r[0], r[1], r[3]) for r in recs if r[2] is not None)
-    linear = B.read_bai_linear(SLICE + ".bai")
-    got = Counter()
-    for span in B.plan_spans(refs, linear, 7_000):
-        for r in _vec(SLICE, refs, span=span):
-            got[(r[1], r[2], r[4])] += 1
-    assert got == whole
+    for path in _slice_inputs(slice_bam):
+        refs, recs = _scalar(path)
+        whole = Counter((r[0], r[1], r[3]) for r in recs if r[2] is not None)
+        got = Counter()
+        for span in _spans(path, refs, 7_000):
+            for r in _vec(path, refs, span=span):
+                got[(r[1], r[2], r[4])] += 1
+        assert got == whole, path
 
 
 @pytest.mark.skipif(not os.path.exists(SLICE), reason="no reference BAM")
@@ -226,23 +237,37 @@ def test_utf8_array_rejects_int32_offset_overflow():
         BV._utf8_array(np.zeros(8, dtype=np.uint8), cum)
 
 
-def test_ckern_and_python_scan_identical(tmp_path, monkeypatch):
+def _cov_events(path, refs, spans):
+    events = []
+    for span in spans:
+        for b in BV.iter_span_cov_events(
+            path, refs, span, chunk_size=1_000, batch_bytes=100_000
+        ):
+            events.extend(zip(*[c.to_pylist() for c in b.columns]))
+    return events
+
+
+def test_ckern_and_python_scan_identical(slice_bam, monkeypatch):
     """The C offset-scan/gather kernel and the pure-Python/NumPy fallback
-    must produce byte-identical decode output (when the kernel built)."""
+    must produce byte-identical decode output (when the kernel built) —
+    for the row decoder and for the fused coverage-events decoder, whole
+    file and over owner-by-start region spans."""
     from sequila_spark.sources import _ckern
 
     if not _ckern.available():
         pytest.skip("C kernel unavailable on this host")
-    path = SLICE if os.path.exists(SLICE) else None
-    if path is None:
-        pytest.skip("no reference BAM")
-    refs, recs = _scalar(path)
-    with_c = _vec(path, refs, batch_bytes=100_000)
-    monkeypatch.setattr(_ckern, "_LIB", False)  # force fallback paths
-    assert not _ckern.available()
-    without_c = _vec(path, refs, batch_bytes=100_000)
-    monkeypatch.setattr(_ckern, "_LIB", None)
-    assert with_c == without_c == [("S",) + r for r in recs]
+    for path in _slice_inputs(slice_bam):
+        refs, recs = _scalar(path)
+        spans = [None] + _spans(path, refs, 5_000)
+        with_c = _vec(path, refs, batch_bytes=100_000)
+        ev_c = _cov_events(path, refs, spans)
+        monkeypatch.setattr(_ckern, "_LIB", False)  # force fallback paths
+        assert not _ckern.available()
+        without_c = _vec(path, refs, batch_bytes=100_000)
+        ev_py = _cov_events(path, refs, spans)
+        monkeypatch.setattr(_ckern, "_LIB", None)
+        assert with_c == without_c == [("S",) + r for r in recs]
+        assert ev_c == ev_py and ev_c, path
 
 
 def test_corrupt_inner_fields_raise_before_gather(tmp_path):

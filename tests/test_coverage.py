@@ -157,7 +157,7 @@ def test_coverage_blocks_walks_matches_union(spark):
             ("r1", "1", 1, 30, "10M5D15M"),   # cigar walk splits; span does not
             ("r2", "1", 8, 27, "20M"),         # crosses chunk boundary at 10/20
             ("r3", "2", 5, 24, "5S10M3I10M"),  # soft-clip + insertion
-            ("r4", "2", 15, 34, None),         # no cigar: both walks span
+            ("r4", "2", 15, 34, None),         # no cigar: only the span walk covers it
         ],
     )
     union = (
@@ -177,15 +177,27 @@ def test_coverage_blocks_walks_matches_union(spark):
     assert walks == {"span", "cigar"}
 
 
-def test_fused_coverage_events_matches_batch_operator(spark):
-    """read_bam_coverage_events + coverage_from_events must produce exactly
-    the rows coverage(read_bam_native(..., with_blocks=True)) produces —
-    unfiltered AND with the reference's 1796/mapq filter, on both real
-    fixtures (incl. the dense-bincount and sorted event paths)."""
+def _fused_inputs(spark, slice_bam, bams):
+    """(bam, chunk) pairs: those of ``bams`` present (one span per contig)
+    plus the round-trip slice BAM at a chunk that splits it into several
+    owner-by-start spans."""
     import os
 
-    import pytest as _pytest
+    from sequila_spark.sources.bam import read_bam_coverage_events
 
+    assert read_bam_coverage_events(
+        spark, slice_bam, chunk=5_000
+    ).rdd.getNumPartitions() > 1
+    return [(b, 10_000_000) for b in bams if os.path.exists(b)] + [
+        (slice_bam, 5_000)
+    ]
+
+
+def test_fused_coverage_events_matches_batch_operator(spark, slice_bam):
+    """read_bam_coverage_events + coverage_from_events must produce exactly
+    the rows coverage(read_bam_native(..., with_blocks=True)) produces —
+    unfiltered AND with the reference's 1796/mapq filter, on every input
+    (incl. the dense-bincount and sorted event paths)."""
     from sequila_spark.sources import read_bam_native
     from sequila_spark.sources.bam import read_bam_coverage_events
     from sequila_spark.operators.coverage import coverage_from_events
@@ -195,23 +207,20 @@ def test_fused_coverage_events_matches_batch_operator(spark):
         "/root/reference/src/test/resources/multichrom/mdbam/"
         "NA12878.multichrom.md.bam",
     ]
-    bams = [b for b in bams if os.path.exists(b)]
-    if not bams:
-        _pytest.skip("no reference BAMs")
-    for bam in bams:
+    for bam, chunk in _fused_inputs(spark, slice_bam, bams):
         a = coverage(
             read_bam_native(
-                spark, bam, with_tags=False,
+                spark, bam, chunk=chunk, with_tags=False,
                 columns=["sample_id", "contig", "pos_start", "pos_end"],
                 with_blocks=True,
             ),
             fuse=False,
         )
-        b = coverage_from_events(read_bam_coverage_events(spark, bam))
+        b = coverage_from_events(read_bam_coverage_events(spark, bam, chunk=chunk))
         assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
         c = coverage(
             read_bam_native(
-                spark, bam, with_tags=False,
+                spark, bam, chunk=chunk, with_tags=False,
                 columns=["sample_id", "contig", "pos_start", "pos_end",
                          "flag", "mapq"],
                 with_blocks=True,
@@ -219,55 +228,51 @@ def test_fused_coverage_events_matches_batch_operator(spark):
             flag_mask=1796, min_mapq=10, fuse=False,
         )
         d = coverage_from_events(
-            read_bam_coverage_events(spark, bam, flag_mask=1796, min_mapq=10)
+            read_bam_coverage_events(
+                spark, bam, chunk=chunk, flag_mask=1796, min_mapq=10
+            )
         )
         assert sorted(map(tuple, c.collect())) == sorted(map(tuple, d.collect()))
 
 
-def test_fused_coverage_events_chunk_sizes(spark):
+def test_fused_coverage_events_chunk_sizes(spark, slice_bam):
     """The fused path must be chunk_size-invariant (clip + merge round
     trip) including TINY chunks that force the boundary-end bincount and
     multi-chunk spans."""
-    import os
-
-    import pytest as _pytest
-
     from sequila_spark.sources.bam import read_bam_coverage_events
     from sequila_spark.operators.coverage import coverage_from_events
 
     bam = "/root/reference/src/test/resources/NA12878.slice.bam"
-    if not os.path.exists(bam):
-        _pytest.skip("no reference BAM")
-    ref = sorted(
-        map(tuple, coverage_from_events(
-            read_bam_coverage_events(spark, bam)).collect())
-    )
-    for cs in (64, 1009, 1_000_000):
-        got = sorted(
+    for bam, chunk in _fused_inputs(spark, slice_bam, [bam]):
+        ref = sorted(
             map(tuple, coverage_from_events(
-                read_bam_coverage_events(spark, bam, chunk_size=cs),
-                chunk_size=cs,
-            ).collect())
+                read_bam_coverage_events(spark, bam, chunk=chunk)).collect())
         )
-        assert got == ref, f"chunk_size={cs}"
+        for cs in (64, 1009, 1_000_000):
+            got = sorted(
+                map(tuple, coverage_from_events(
+                    read_bam_coverage_events(
+                        spark, bam, chunk=chunk, chunk_size=cs
+                    ),
+                    chunk_size=cs,
+                ).collect())
+            )
+            assert got == ref, f"{bam} chunk_size={cs}"
 
 
-def test_fused_events_chunk_size_mismatch_is_loud(spark):
+def test_fused_events_chunk_size_mismatch_is_loud(spark, slice_bam):
     """Events clipped at one chunk_size consumed with another must raise
     (a silent mismatch would leave boundary splits unmerged)."""
-    import os
-
     import pytest as _pytest
 
     from sequila_spark.sources.bam import read_bam_coverage_events
     from sequila_spark.operators.coverage import coverage_from_events
 
     bam = "/root/reference/src/test/resources/NA12878.slice.bam"
-    if not os.path.exists(bam):
-        _pytest.skip("no reference BAM")
-    ev = read_bam_coverage_events(spark, bam, chunk_size=16_384)
-    with _pytest.raises(Exception, match="different chunk_size"):
-        coverage_from_events(ev, chunk_size=1_000_000).count()
+    for bam, chunk in _fused_inputs(spark, slice_bam, [bam]):
+        ev = read_bam_coverage_events(spark, bam, chunk=chunk, chunk_size=16_384)
+        with _pytest.raises(Exception, match="different chunk_size"):
+            coverage_from_events(ev, chunk_size=1_000_000).count()
 
 
 def test_coverage_auto_fuses_native_reader(spark):

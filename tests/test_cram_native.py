@@ -186,12 +186,8 @@ def test_resolve_mates_pair_semantics():
 def test_unsupported_cram_falls_back_at_plan_time(spark, tmp_path):
     """A CRAM outside the supported shape (here: major version 2) must
     raise at read_bam() CALL time — not as an opaque executor failure —
-    and reach the pysam-guidance error through the real fallback path
-    (no monkeypatching)."""
-    import importlib
-
-    if importlib.util.find_spec("pysam") is not None:
-        pytest.skip("pysam installed; guidance path not reachable")
+    and reach the read_alignments guidance error through the real
+    plan-time validation (no monkeypatching)."""
     data = bytearray(open(CRAM, "rb").read())
     data[4] = 2  # claim CRAM v2: different container framing, unsupported
     bad = str(tmp_path / "v2.cram")
