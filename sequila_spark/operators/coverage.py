@@ -392,12 +392,16 @@ def coverage(
     (utvf/ResolveTableValuedFunctionsSeq.scala:239).
 
     ``fuse`` (default auto): when ``reads`` is the UNTRANSFORMED result of
-    sources.read_bam_native, the plan is rewritten to the fused
+    sources.read_bam_native or read_cram_native — the relation itself, or
+    a view of it read back by ``spark.table`` or ``SELECT *`` (reader
+    provenance, planutil.reader_provenance; how the ``coverage('reads')``
+    SQL function sees it) — the plan is rewritten to the fused
     decode->events reader (read_bam_coverage_events +
     coverage_from_events) — same rows (pinned by
     tests/test_coverage.py), ~10x fewer shuffled rows, zero string
     rendering, the way the reference fuses coverage into its scan
-    (pileup/PileupStrategy.scala:37-56).  ``fuse=False`` forces the
+    (pileup/PileupStrategy.scala:37-56).  A filter or projection of the
+    reader relation drops the provenance.  ``fuse=False`` forces the
     declarative plan; ``fuse=True`` raises if the relation has no reader
     provenance to fuse on.
     """
@@ -406,8 +410,10 @@ def coverage(
     if mode == "windows" and not window_size:
         raise ValueError("mode='windows' requires window_size")
 
-    csrc = getattr(reads, "_sequila_cram_source", None)
-    if csrc is not None and fuse is not False and csrc["columns"] is None:
+    from sequila_spark.planutil import reader_provenance
+
+    csrc = reader_provenance(reads, "cram") if fuse is not False else None
+    if csrc is not None and csrc["columns"] is None:
         if use_cigar is not False:
             # FULL CRAM fusion (r13): decode -> clipped coverage events
             # inside the container task — zero per-record strings, the
@@ -450,22 +456,26 @@ def coverage(
             columns=[S.FLAG, S.CONTIG, S.START, S.END, S.MAPQ],
         )
 
-    src = getattr(reads, "_sequila_bam_source", None)
-    fusable = (
-        src is not None
+    cols = reads.columns
+    src = (
+        reader_provenance(reads, "bam")
+        if fuse is not False
         and use_cigar is not False
-        and src["has_cigar"]
+        # aligned-block semantics need the cigar walk (or decode-time
+        # blocks); span-only relations must not fuse
+        and (S.CIGAR in cols or "__blocks" in cols)
         # the declarative filter is a no-op when the column is absent —
         # the fused reader must not filter where the unfused plan cannot
-        and (flag_mask == 0 or src["has_flag"])
-        and (min_mapq == 0 or src["has_mapq"])
+        and (flag_mask == 0 or S.FLAG in cols)
+        and (min_mapq == 0 or S.MAPQ in cols)
+        else None
     )
-    if fuse is True and not fusable:
+    if fuse is True and src is None:
         raise ValueError(
             "fuse=True requires an untransformed read_bam_native relation "
             "(with cigar/flag/mapq available for the requested filters)"
         )
-    if fusable and fuse is not False:
+    if src is not None:
         from sequila_spark.sources.bam import read_bam_coverage_events
 
         events = read_bam_coverage_events(

@@ -22,6 +22,11 @@ everything else is two hash aggregations:
 At scale this is one shuffle keyed by genomic position — no driver state, no
 partition-boundary fix-ups (shuffle alignment replaces
 AlignmentsRDD.scala:148-236).
+
+Over a read_bam_native relation (or a view of one) a counts-only call skips
+the explode: the BAM decode itself emits per-batch (contig, pos, base,
+count) rows (sources.read_bam_pileup_counts), which feed g1's sum, and the
+shared tail (_pileup_tail) is unchanged.
 """
 
 from __future__ import annotations
@@ -509,27 +514,68 @@ def pileup(
     ONE such cache per session — the next baq+mate_overlap call
     unpersists the previous one.
 
-    ``fuse`` mirrors coverage(): default auto applies the reader-provenance
-    CRAM decode prune below when ``reads`` is an untransformed
-    read_cram_native relation; ``fuse=False`` keeps the full decode (a
-    plain ``.select()`` over the relation also strips the provenance);
-    ``fuse=True`` raises when there is no provenance to prune on.
+    ``fuse`` (default auto) mirrors coverage(): when ``reads`` is a
+    read_bam_native relation, or a view of one (reader provenance,
+    planutil.reader_provenance), and the call needs only base counts
+    (``quals=False``, no ``baq``, no ``mate_overlap``, ``use_cigar`` not
+    False, ``strategy='auto'``), the bases are counted inside the decode
+    (read_bam_pileup_counts) and only (contig, pos, base, count) rows
+    reach Spark — the same rows as the dense plan, the way the reference
+    pileup counts inside its scan (pileup/Pileup.scala:19-58).  A
+    read_cram_native relation with provenance is re-read with only the
+    columns pileup needs (no tag, qname or mate decode; qual only when
+    quals/baq ask for it).  ``fuse=False`` keeps the plan over ``reads``
+    as given; ``fuse=True`` raises when neither applies.  Any filter or
+    projection of the reader relation drops the provenance.
     """
     from sequila_spark.operators.coverage import filter_reads
+    from sequila_spark.planutil import reader_provenance
 
     if strategy not in ("auto", "sparse", "dense"):
         raise ValueError(f"unknown pileup strategy: {strategy!r}")
 
-    csrc = getattr(reads, "_sequila_cram_source", None)
-    if fuse is True and (csrc is None or csrc["columns"] is not None):
+    cols = set(reads.columns)
+    # the columns the dense plan reads (it fails without them)
+    dense_cols = {S.CONTIG, S.START, S.CIGAR, S.SEQUENCE}
+    if flag_mask or min_mapq:
+        dense_cols.add(S.END)
+    bsrc = csrc = None
+    if fuse is not False:
+        if (
+            strategy == "auto" and not (quals or baq or mate_overlap)
+            and use_cigar is not False and dense_cols <= cols
+        ):
+            bsrc = reader_provenance(reads, "bam")
+        if bsrc is None:
+            csrc = reader_provenance(reads, "cram")
+            if csrc is not None and csrc["columns"] is not None:
+                csrc = None
+    if fuse is True and bsrc is None and csrc is None:
         raise ValueError(
-            "fuse=True requires an untransformed read_cram_native relation "
-            "(reader provenance carries the decode-prune contract)"
+            "fuse=True requires a read_bam_native relation (with a "
+            "counts-only pileup call) or a read_cram_native relation, "
+            "untransformed (reader provenance)"
         )
-    if fuse is False:
-        csrc = None
-    if csrc is not None and csrc["columns"] is None:
-        # reader-provenance decode pruning (same contract as coverage):
+    if bsrc is not None:
+        from sequila_spark.sources.bam import read_bam_pileup_counts
+
+        counts = read_bam_pileup_counts(
+            reads.sparkSession,
+            bsrc["path"],
+            chunk=bsrc["chunk"],
+            # filter_reads and strand casing act only where the column is
+            flag_mask=flag_mask if S.FLAG in cols else 0,
+            min_mapq=min_mapq if S.MAPQ in cols else 0,
+            strand_case=strand_case and S.FLAG in cols,
+        )
+        # same single exchange as the dense head below
+        g1 = (
+            counts.repartition(F.col(S.CONTIG), F.col("pos"))
+            .groupBy(S.CONTIG, "pos", "base")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
+        return _pileup_tail(g1, ref, alts=alts, quals=False)
+    if csrc is not None:
         # pileup never reads tags, and qname/mate fields only under
         # mate_overlap; qual only when quals/baq ask for it — skip their
         # rendering and transfer at the CRAM decode itself
@@ -637,9 +683,21 @@ def pileup(
     else:
         g1 = per_base.groupBy(*group1).agg(F.count("*").alias("cnt"))
 
-    # Attach the reference base AFTER the first aggregation: g1 has at most a
-    # few rows per position (distinct observed bases), so the ref join/
-    # expression touches orders of magnitude fewer rows than per-base would.
+    return _pileup_tail(g1, ref, alts=alts, quals=quals)
+
+
+def _pileup_tail(
+    g1: DataFrame, ref: DataFrame | RefExpr | None, *, alts: bool, quals: bool
+) -> DataFrame:
+    """Shared tail of pileup()'s dense and fused heads: per-(contig, pos,
+    base) counts ``cnt`` (and ``hist`` under quals), partitioned by
+    (contig, pos) -> the reference base, then one row per position.
+
+    The reference base attaches AFTER the first aggregation: g1 has at
+    most a few rows per position (distinct observed bases), so the ref
+    join/expression touches orders of magnitude fewer rows than per-base
+    would."""
+    extra = ["hist"] if quals else []
     if isinstance(ref, DataFrame):
         refd = ref.select(
             F.col(S.CONTIG).alias("__rc"), F.col("pos").alias("__rp"), F.col(S.REF).alias("__rb")
@@ -648,7 +706,7 @@ def pileup(
             refd,
             (g1[S.CONTIG] == refd["__rc"]) & (g1["pos"] == refd["__rp"]),
             "left",
-        ).select(g1[S.CONTIG], "pos", "base", "cnt", *(["hist"] if quals else []), F.col("__rb").alias("ref_base"))
+        ).select(g1[S.CONTIG], "pos", "base", "cnt", *extra, F.col("__rb").alias("ref_base"))
     elif callable(ref):
         g1 = g1.withColumn("ref_base", ref(F.col(S.CONTIG), F.col("pos")))
     else:

@@ -1,12 +1,14 @@
-"""Planner-statistics helpers shared by the budget-gated broadcast hints
-(range_join composed-variant rowid gate, similarity vector re-attach gate).
-
-Extracted per r15 ADVICE: the two operators carried byte-identical
-try/except optimizedPlan-stats gates differing only in budget constant,
-inviting drift.
+"""Plan helpers: planner statistics for the budget-gated broadcast hints
+(range_join composed-variant rowid gate, similarity vector re-attach
+gate), and the reader-provenance registry the fused coverage and pileup
+plans are chosen on.
 """
 
 from __future__ import annotations
+
+import json
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame
 
@@ -31,3 +33,52 @@ def plan_stats(df: DataFrame) -> tuple[int | None, int | None]:
     except Exception:
         rows = None
     return size, rows
+
+
+# Reader provenance: the alignment readers register each relation they
+# return, with the arguments that built it, so coverage() and pileup() can
+# re-plan an untransformed reader relation as a fused decode.  A relation
+# is recognised by plan, not by Python object: a temp view over the reader,
+# spark.table(view) and a ``SELECT *`` view all compare sameSemantics with
+# it, while a filter, a projection or another file does not.  The registry
+# holds the reader DataFrame, so provenance outlives the caller's own
+# reference; it keeps the most recent _READERS_MAX distinct reader calls.
+_READERS: OrderedDict = OrderedDict()
+_READERS_MAX = 16
+_READERS_LOCK = threading.Lock()
+
+
+def register_reader(kind: str, df: DataFrame, **args) -> DataFrame:
+    """Record ``df`` as the relation the ``kind`` reader built from
+    ``args`` (JSON-able reader arguments); returns ``df``."""
+    key = (kind, json.dumps(args, sort_keys=True, default=str))
+    with _READERS_LOCK:
+        _READERS.pop(key, None)
+        _READERS[key] = (args, df, tuple(df.columns))
+        while len(_READERS) > _READERS_MAX:
+            _READERS.popitem(last=False)
+    return df
+
+
+def reader_provenance(reads: DataFrame, kind: str) -> dict | None:
+    """The arguments of the ``kind`` reader call whose relation ``reads``
+    is semantically equal to (the reader's own rows, unfiltered and
+    unprojected), or None."""
+    with _READERS_LOCK:
+        cands = [(k, v) for k, v in reversed(_READERS.items()) if k[0] == kind]
+    if not cands:
+        return None
+    cols = tuple(reads.columns)
+    for key, (args, df, df_cols) in cands:
+        if df_cols != cols:
+            continue
+        try:
+            same = reads.sameSemantics(df)
+        except Exception:  # a reader of a stopped session
+            continue
+        if same:
+            with _READERS_LOCK:
+                if key in _READERS:
+                    _READERS.move_to_end(key)
+            return args
+    return None

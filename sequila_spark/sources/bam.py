@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from sequila_spark import schemas as S
 from sequila_spark.functions.intervals import clean_contig
+from sequila_spark.planutil import register_reader
 
 
 def write_alignments(
@@ -494,7 +495,15 @@ def read_bam_native(
     present, so a ``columns`` list that omits ``flag``/``mapq`` silently
     disables that filtering — include them whenever reads feed a filtered
     operator.  ``typed_tags=True`` with a ``columns`` list that omits
-    ``'tags'`` is rejected here (it would fail at plan time otherwise)."""
+    ``'tags'`` is rejected here (it would fail at plan time otherwise).
+
+    The relation is registered as reader provenance
+    (planutil.register_reader): ``coverage()`` and ``pileup()`` over it,
+    or over a temp view of it read back by ``spark.table`` or a
+    ``SELECT *`` view (as the SQL ``coverage('v')``/``pileup('v')``
+    functions do), plan the fused decode readers
+    (read_bam_coverage_events, read_bam_pileup_counts) instead of
+    decoding every column.  A filter or projection of it does not."""
     from sequila_spark.sources import bamcodec as B
 
     refs_by_path, spans = _plan_bam_spans(path, chunk)
@@ -549,68 +558,38 @@ def read_bam_native(
         df = _one_task_per_item(spark, len(spans), decode, schema_str)
         if S.CONTIG in keep:
             df = df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
-        out = with_typed_tags(df) if typed_tags else df
-        _attach_bam_provenance(
-            out, path, chunk, columns=columns, with_blocks=with_blocks
-        )
-        return out
+    else:
+        def gen(task):
+            span_idx, (p, sample, span) = task
+            with open(p, "rb") as fh:
+                st, region, unmapped_only = B.open_span(fh, span)
+                ref_id, start0, end0 = region or (None, 0, None)
+                it = B.parse_records(
+                    st, refs_by_path[p], ref_id=ref_id, start0=start0,
+                    end0=end0, with_tags=with_tags,
+                    unmapped_only=unmapped_only,
+                )
+                if with_ordinal:
+                    base_ord = span_idx << 32
+                    for i, rec in enumerate(it):
+                        yield (sample, *rec, base_ord | i)
+                else:
+                    for rec in it:
+                        yield (sample, *rec)
 
-    def gen(task):
-        span_idx, (p, sample, span) = task
-        with open(p, "rb") as fh:
-            st, region, unmapped_only = B.open_span(fh, span)
-            ref_id, start0, end0 = region or (None, 0, None)
-            it = B.parse_records(
-                st, refs_by_path[p], ref_id=ref_id, start0=start0, end0=end0,
-                with_tags=with_tags, unmapped_only=unmapped_only,
-            )
-            if with_ordinal:
-                base_ord = span_idx << 32
-                for i, rec in enumerate(it):
-                    yield (sample, *rec, base_ord | i)
-            else:
-                for rec in it:
-                    yield (sample, *rec)
-
-    rdd = spark.sparkContext.parallelize(
-        list(enumerate(spans)), max(len(spans), 1)
-    ).flatMap(gen)
-    df = rdd.toDF(schema_str)
-    df = df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
-    out = with_typed_tags(df) if typed_tags else df
-    _attach_bam_provenance(out, path, chunk, columns=None, with_blocks=False)
-    return out
-
-
-def _attach_bam_provenance(
-    df: DataFrame,
-    path,
-    chunk: int,
-    *,
-    columns: list[str] | None,
-    with_blocks: bool,
-) -> None:
-    """Stamp reader provenance on a read_bam_native result so
-    operators.coverage can auto-route the declarative
-    ``coverage(read_bam_native(...))`` composition through the fused
-    decode->events plan (read_bam_coverage_events) — the reference fuses
-    scan+aggregate in its physical operator (pileup/PileupStrategy.scala:
-    37-56); here the fusion triggers on lineage without an opt-in reader.
-    The attribute lives on THIS DataFrame object only: any transformation
-    (filter/select/join) returns a new DataFrame without it, which is
-    exactly the contract — the fused reader can only reproduce the
-    reader's own row set."""
-    df._sequila_bam_source = {
-        "path": path,
-        "chunk": chunk,
-        # aligned-block semantics require the cigar walk (or decode-time
-        # blocks); span-only relations must not fuse
-        "has_cigar": columns is None or S.CIGAR in columns or with_blocks,
-        # filter pushdown parity: the declarative filter applies flag/mapq
-        # predicates only when those columns exist on the relation
-        "has_flag": columns is None or S.FLAG in columns,
-        "has_mapq": columns is None or S.MAPQ in columns,
-    }
+        rdd = spark.sparkContext.parallelize(
+            list(enumerate(spans)), max(len(spans), 1)
+        ).flatMap(gen)
+        df = rdd.toDF(schema_str)
+        df = df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
+    # reader provenance: coverage() and pileup() re-plan this relation,
+    # and any view of it, as a fused decode (planutil.reader_provenance)
+    return register_reader(
+        "bam", with_typed_tags(df) if typed_tags else df,
+        path=path, chunk=chunk, with_tags=with_tags, typed_tags=typed_tags,
+        with_ordinal=with_ordinal, arrow=arrow, columns=columns,
+        with_blocks=with_blocks,
+    )
 
 
 def read_bam_coverage_events(
@@ -634,9 +613,48 @@ def read_bam_coverage_events(
     ``coverage()`` routes an untransformed read_bam_native relation here
     automatically.  ``flag_mask``/``min_mapq`` apply filter_reads'
     predicates at decode time (pass 1796 for the reference's default read
-    filter).  Span planning is read_bam_native's (_plan_bam_spans), minus
-    the trailing no-coordinate span: unmapped records carry no aligned
-    blocks, so that span would be a task that emits nothing."""
+    filter).  Span planning is _mapped_span_reader's."""
+    return _mapped_span_reader(
+        spark, path, chunk, "iter_span_cov_events",
+        "contig string, chunk long, pos int, delta int",
+        chunk_size=chunk_size, flag_mask=flag_mask, min_mapq=min_mapq,
+    )
+
+
+def read_bam_pileup_counts(
+    spark: SparkSession,
+    path: str | list[str],
+    *,
+    flag_mask: int = 0,
+    min_mapq: int = 0,
+    strand_case: bool = False,
+    chunk: int = 10_000_000,
+) -> DataFrame:
+    """Fused decode->base-count reader: (contig, pos, base, cnt) rows,
+    counted per decode batch (sources/bamvec.iter_span_pileup_counts).
+    Summed per (contig, pos, base) they equal the per-base rows
+    ``pileup()``'s dense plan expands from ``read_bam_native(path)`` and
+    groups, which is how ``pileup()`` uses this reader for an
+    untransformed read_bam_native relation; the reference counts bases
+    inside its scan the same way (pileup/Pileup.scala).  ``flag_mask``/
+    ``min_mapq`` apply filter_reads' predicates at decode time;
+    ``strand_case`` renders reverse-strand bases lowercase.  Span planning
+    is _mapped_span_reader's."""
+    return _mapped_span_reader(
+        spark, path, chunk, "iter_span_pileup_counts",
+        "contig string, pos int, base string, cnt long",
+        flag_mask=flag_mask, min_mapq=min_mapq, strand_case=strand_case,
+    )
+
+
+def _mapped_span_reader(
+    spark: SparkSession, path, chunk: int, iter_name: str, schema_str: str, **kw
+) -> DataFrame:
+    """One task per read_bam_native span (_plan_bam_spans), minus the
+    trailing no-coordinate span: its unmapped records carry no aligned
+    blocks, so it would be a task that emits nothing.  Task i yields
+    ``bamvec.<iter_name>(path, refs, span, **kw)``; contig names are
+    normalised as read_bam_native's."""
     refs_by_path, spans = _plan_bam_spans(path, chunk)
     spans = [s for s in spans if s[2] is None or s[2][0] != "__unmapped__"]
 
@@ -644,18 +662,9 @@ def read_bam_coverage_events(
         from sequila_spark.sources import bamvec as BV
 
         p, _sample, span = spans[sid]
-        return BV.iter_span_cov_events(
-            p,
-            refs_by_path[p],
-            span,
-            chunk_size=chunk_size,
-            flag_mask=flag_mask,
-            min_mapq=min_mapq,
-        )
+        return getattr(BV, iter_name)(p, refs_by_path[p], span, **kw)
 
-    df = _one_task_per_item(
-        spark, len(spans), decode, "contig string, chunk long, pos int, delta int"
-    )
+    df = _one_task_per_item(spark, len(spans), decode, schema_str)
     return df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
 
 #: (path, size, mtime_ns) -> (ref_names, rg_names, containers, validated)
@@ -940,20 +949,14 @@ def read_cram_native(
         if start is not None:
             cond = cond & (F.col(S.END) >= F.lit(start))
         df = df.where(cond)
-    # reader provenance (same contract as _attach_bam_provenance: the
-    # attribute lives on THIS object only) — operators.coverage re-plans
-    # a full-column coverage(read_cram_native(...)) composition as a
-    # column-PRUNED re-read, skipping qname/tags/seq/qual rendering and
-    # transfer entirely
-    df._sequila_cram_source = {
-        "path": path,
-        "ref_path": ref_path,
-        "columns": columns,
-        "contig": contig,
-        "start": start,
-        "end": end,
-    }
-    return df
+    # reader provenance (as read_bam_native's): coverage() re-plans a
+    # full-column relation, or any view of it, as the fused events reader,
+    # and pileup() as a column-pruned re-read that skips qname/tags/qual
+    # rendering and transfer
+    return register_reader(
+        "cram", df, path=path, ref_path=ref_path, with_tags=with_tags,
+        contig=contig, start=start, end=end, columns=columns,
+    )
 
 
 def read_cram_coverage_events(

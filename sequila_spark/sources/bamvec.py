@@ -17,6 +17,10 @@ This module removes both Python-per-record costs while keeping
  - batches flow to the JVM through ``mapInArrow`` (columnar Arrow IPC)
    instead of pickled Row tuples.
 
+The fused readers (iter_span_cov_events, iter_span_pileup_counts) share
+the same record framing and aligned-block walk but never render a column:
+they aggregate coverage events or base counts inside each batch.
+
 Only the optional-tag decode (``with_tags=True``) stays per-record: tag
 streams are variable-typed (hts-specs SAM v1.6 §4.2.4) and reuse
 ``bamcodec._decode_tags`` so both paths render identically.
@@ -57,11 +61,12 @@ assert _HDR_DT.itemsize == 36
 
 _SEQ_LUT = np.frombuffer(B.SEQ_CODES.encode(), dtype=np.uint8)  # 4-bit code -> base
 _CIGAR_LUT = np.frombuffer((B.CIGAR_OPS + "???????").encode(), dtype=np.uint8)
-# ops consuming reference: M D N = X  (codes 0 2 3 7 8)
+# ops consuming reference: M D N = X  (codes 0 2 3 7 8); query: M I S = X
 _REF_CONSUME = np.zeros(16, dtype=np.int64)
+_QUERY_CONSUME = np.zeros(16, dtype=np.int64)
 for _i, _c in enumerate(B.CIGAR_OPS):
-    if _c in "MDN=X":
-        _REF_CONSUME[_i] = 1
+    _REF_CONSUME[_i] = _c in "MDN=X"
+    _QUERY_CONSUME[_i] = _c in "MIS=X"
 
 _EMPTY_U8 = np.empty(0, dtype=np.uint8)
 
@@ -201,28 +206,31 @@ def _cigar_column(
 
 
 def _blocks_raw(
-    cig_u32: np.ndarray, op_cum: np.ndarray, pos0: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    cig_u32: np.ndarray, op_cum: np.ndarray, pos0: np.ndarray, query: bool = False
+) -> tuple[np.ndarray, ...]:
     """Vectorized aligned-block extraction: (bs, be, rec_of_block,
     blocks_per_record) — 1-based inclusive reference intervals of every
     record's M/=/X ops (the reference's Read.getAlignmentBlocks,
-    pileup/model/Read.scala:27-54), over the whole batch at once."""
+    pileup/model/Read.scala:27-54), over the whole batch at once.
+    ``query=True`` appends each block's 0-based query (seq) offset."""
     nums = (cig_u32 >> 4).astype(np.int64)
     ops = cig_u32 & 0xF
-    ref_adv = nums * _REF_CONSUME[ops]
-    # per-op exclusive within-record offset from the record's pos0
-    cum = np.cumsum(ref_adv)
-    excl = cum - ref_adv
     n = len(op_cum) - 1
     op_counts = op_cum[1:] - op_cum[:-1]
-    exclp = np.concatenate((excl, [0]))
-    base = np.repeat(exclp[op_cum[:-1]], op_counts)
-    rec_pos0 = np.repeat(pos0, op_counts)
+
+    def within(adv):
+        # per-op exclusive offset from the start of its record
+        excl = np.cumsum(adv) - adv
+        return excl - np.repeat(np.concatenate((excl, [0]))[op_cum[:-1]], op_counts)
+
+    ref_off = np.repeat(pos0, op_counts) + within(nums * _REF_CONSUME[ops])
     rec_of_op = np.repeat(np.arange(n, dtype=np.int64), op_counts)
     emit = (ops == 0) | (ops == 7) | (ops == 8)  # M, =, X
-    bs = (rec_pos0 + (excl - base) + 1)[emit]
-    be = (rec_pos0 + (excl - base) + nums)[emit]
+    bs = (ref_off + 1)[emit]
+    be = (ref_off + nums)[emit]
     per_rec = _segment_sums(emit.astype(np.int64), op_cum)
+    if query:
+        return bs, be, rec_of_op[emit], per_rec, within(nums * _QUERY_CONSUME[ops])[emit]
     return bs, be, rec_of_op[emit], per_rec
 
 
@@ -647,8 +655,25 @@ def iter_span_cov_events(
     ref_take = pa.array([nm for nm, _ in refs], type=pa.string())
     k2 = chunk_size + 2  # local position in [1, chunk_size+1]
     k1 = ((1 << 31) // chunk_size + 2) * k2
+    for u8, offs, h in _iter_kept_records(
+        path, span, batch_bytes, flag_mask, min_mapq
+    ):
+        batch = _cov_event_batch(u8, h, offs, ref_take, chunk_size, k1, k2)
+        if batch is not None:
+            yield batch
+
+
+def _iter_kept_records(
+    path, span, batch_bytes, flag_mask, min_mapq, with_seq=False
+):
+    """_iter_span_records' batches cut to the records a fused reader uses:
+    placed on a reference (ref_id >= 0) and passing filter_reads'
+    flag/mapq predicates; ``with_seq`` also drops records with an empty
+    seq.  Yields ``(u8, offs, h)`` for every non-empty batch."""
     for data, offs, h in _iter_span_records(path, span, batch_bytes):
         keep = h["rid"] >= 0
+        if with_seq:
+            keep &= h["l_seq"] > 0
         if flag_mask:
             keep &= (h["flag"].astype(np.int64) & flag_mask) == 0
         if min_mapq:
@@ -656,12 +681,7 @@ def iter_span_cov_events(
         if not keep.all():
             h, offs = h[keep], offs[keep]
         if len(h):
-            batch = _cov_event_batch(
-                np.frombuffer(data, dtype=np.uint8), h, offs, ref_take,
-                chunk_size, k1, k2,
-            )
-            if batch is not None:
-                yield batch
+            yield np.frombuffer(data, dtype=np.uint8), offs, h
 
 
 def _cov_event_batch(
@@ -765,4 +785,121 @@ def events_from_blocks(
             pa.array(sums.astype(np.int32)),
         ],
         ["contig", "chunk", "pos", "delta"],
+    )
+
+
+# pileup base codes: the 4-bit seq code, +16 for a reverse-strand base under
+# strand_case (rendered lowercase; '=' has no case and keeps code 0)
+_PILEUP_BASES = pa.array(list(B.SEQ_CODES) + list(B.SEQ_CODES.lower()), pa.string())
+
+
+def iter_span_pileup_counts(
+    path: str,
+    refs: list[tuple[str, int]],
+    span,
+    *,
+    flag_mask: int = 0,
+    min_mapq: int = 0,
+    strand_case: bool = False,
+    batch_bytes: int = 8 << 20,
+    max_bases: int = 1 << 20,
+):
+    """Fused decode -> per-position base counts, aggregated per batch.
+
+    The pileup analog of iter_span_cov_events: each record's M/=/X blocks
+    (_blocks_raw, with their query offsets) pick its aligned seq nibbles
+    straight out of the framed bytes, and one count per (ref, pos, base
+    code) key leaves the batch — no per-read strings and no per-base rows
+    reach Spark.  Bases are those pileup()'s dense plan expands: a
+    soft-clipped or inserted base has no reference position, a D/N op has
+    no base, a reverse-strand base is lowercase under ``strand_case``.
+
+    Emits RecordBatches (contig utf8, pos int32, base utf8, cnt int64);
+    operators.pileup completes the count per (contig, pos, base).
+    ``flag_mask``/``min_mapq`` apply filter_reads' predicates at decode
+    time.  Records without a reference id or with an empty seq (decoded
+    as a NULL seq) contribute nothing.  At most ``max_bases`` bases are
+    expanded at a time, so the per-base numpy arrays stay bounded whatever
+    ``batch_bytes`` is.  A record whose CIGAR consumes more query bases
+    than its seq holds is invalid SAM and raises ValueError."""
+    ref_take = pa.array([nm for nm, _ in refs], type=pa.string())
+    for u8, offs, h in _iter_kept_records(
+        path, span, batch_bytes, flag_mask, min_mapq, with_seq=True
+    ):
+        batch = _pileup_count_batch(u8, h, offs, ref_take, strand_case, max_bases)
+        if batch is not None:
+            yield batch
+
+
+def _pileup_count_batch(
+    u8, h, offs, ref_take, strand_case, max_bases
+) -> pa.RecordBatch | None:
+    """One batch's (contig, pos, base, cnt) rows (see
+    iter_span_pileup_counts).  A key packs ``rid << 37 | pos << 5 |
+    code``."""
+    l_seq = h["l_seq"].astype(np.int64)
+    n_cigar = h["n_cigar"].astype(np.int64)
+    cg_off = offs + 36 + h["l_qname"].astype(np.int64)
+    cg_vals, cg_cum = _ragged_take(u8, cg_off, 4 * n_cigar)
+    cig_u32 = np.ascontiguousarray(cg_vals).view("<u4")
+    op_cum = cg_cum // 4
+    qlen = _segment_sums(
+        (cig_u32 >> 4).astype(np.int64) * _QUERY_CONSUME[cig_u32 & 0xF], op_cum
+    )
+    bad = qlen > l_seq
+    if bad.any():
+        j = int(np.argmax(bad))
+        raise ValueError(
+            f"invalid BAM record at offset {int(offs[j])}: CIGAR query "
+            f"length {int(qlen[j])} exceeds l_seq {int(l_seq[j])}"
+        )
+    bs, be, rec, _, qs = _blocks_raw(
+        cig_u32, op_cum, h["pos"].astype(np.int64), query=True
+    )
+    if not len(bs):
+        return None
+    # per block: the nibble address of its first base in ``u8`` (2 * byte,
+    # +1 for a low nibble) and the key of its first base
+    nib0 = 2 * (cg_off + 4 * n_cigar)[rec] + qs
+    key0 = (h["rid"].astype(np.int64)[rec] << 37) | (bs << 5)
+    if strand_case:
+        rev16 = np.where(h["flag"][rec] & 16, 16, 0)
+    blen = be - bs + 1
+    bcum = np.zeros(len(blen) + 1, dtype=np.int64)
+    np.cumsum(blen, out=bcum[1:])
+    parts = []
+    j0 = 0
+    while j0 < len(blen):
+        # the next run of whole blocks holding at most max_bases bases
+        j1 = max(int(np.searchsorted(bcum, bcum[j0] + max_bases, "right")) - 1, j0 + 1)
+        nb = blen[j0:j1]
+        start = bcum[j0:j1] - bcum[j0]
+        it = _iota(int(bcum[j1] - bcum[j0]))
+        a = np.repeat(nib0[j0:j1] - start, nb) + it
+        code = (u8[a >> 1] >> ((1 - (a & 1)) << 2)) & 0xF
+        key = np.repeat(key0[j0:j1] - (start << 5), nb) + (it << 5) + code
+        if strand_case:
+            key += np.repeat(rev16[j0:j1], nb) * (code != 0)
+        lo = int(key.min())
+        rng = int(key.max()) - lo + 1
+        if rng <= 2 * len(key) + (1 << 16):
+            c = np.bincount(key - lo, minlength=rng)
+            nz = np.flatnonzero(c)
+            parts.append((nz + lo, c[nz]))
+        else:
+            parts.append(np.unique(key, return_counts=True))
+        j0 = j1
+    if len(parts) == 1:
+        keys, cnt = parts[0]
+    else:
+        keys, inv = np.unique(np.concatenate([k for k, _ in parts]), return_inverse=True)
+        cnt = np.bincount(inv, weights=np.concatenate([c for _, c in parts]))
+    return pa.RecordBatch.from_arrays(
+        [
+            ref_take.take(pa.array((keys >> 37).astype(np.int32))),
+            pa.array(((keys >> 5) & 0xFFFFFFFF).astype(np.int32)),
+            _PILEUP_BASES.take(pa.array((keys & 31).astype(np.int32))),
+            pa.array(cnt.astype(np.int64)),
+        ],
+        ["contig", "pos", "base", "cnt"],
     )

@@ -54,14 +54,20 @@ def read_fasta(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_fasta_bases(spark: SparkSession, path: str) -> DataFrame:
-    """(contig, pos, ref) — one row per base, joinable with pileup output."""
-    per_contig = read_fasta(spark, path)
+    """(contig, pos, ref) — one row per base, joinable with pileup output;
+    ``ref`` is uppercased and an empty contig yields no rows.
+
+    Linear in contig length: each contig's uppercased sequence is split
+    into characters once and posexploded, so no output row carries the
+    sequence.  Parsing is still one task per FASTA file and every contig
+    is one row of it; for a genome-scale reference convert this relation
+    to parquet once and read that instead."""
+    per_contig = read_fasta(spark, path).where(F.col(S.END) > 0)
     return per_contig.select(
         F.col(S.CONTIG),
-        F.col("seq"),
-        F.explode(F.sequence(F.lit(1), F.length("seq"))).alias("pos"),
+        F.posexplode(F.split(F.upper(F.col("seq")), "")).alias("i", S.REF),
     ).select(
         F.col(S.CONTIG),
-        F.col("pos").cast("int").alias("pos"),
-        F.upper(F.expr("substr(seq, pos, 1)")).alias(S.REF),
+        (F.col("i") + 1).cast("int").alias("pos"),
+        F.col(S.REF),
     )

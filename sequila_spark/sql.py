@@ -19,6 +19,7 @@ Supported TVFs (surface from ResolveTableValuedFunctionsSeq.scala:88-127):
 from __future__ import annotations
 
 import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -272,38 +273,49 @@ def sequila_sql(spark: SparkSession, query: str) -> DataFrame:
     """Run SQL with sequila TVF support (see module docstring).  TVF calls
     are recognized only in FROM/JOIN positions and never inside string
     literals; arguments may be literals, or constant SQL expressions
-    (including nested function calls), which Spark evaluates first."""
+    (including nested function calls), which Spark evaluates first.
+
+    Each call's relation is registered under a view name of its own and
+    dropped once the rewritten query is analyzed (the returned DataFrame
+    holds the analyzed plan), so concurrent calls on one session cannot
+    read each other's relations."""
     masked = _mask_comments(query)
     calls = _find_tvf_calls(masked)
     pieces = []
+    views = []
     last = 0
-    for counter, (start, end, name, raw) in enumerate(calls):
-        args = _parse_args(raw, spark)
-        df = _TVFS[name](spark, args)
-        view = f"__sequila_tvf_{counter}"
-        df.createOrReplaceTempView(view)
-        pieces.append(query[last:start])
-        pieces.append(view)
-        last = end
-    pieces.append(query[last:])
-    rewritten = "".join(pieces)
     try:
-        return spark.sql(rewritten)
-    except Exception as e:
-        # A TVF name left unrewritten (e.g. used outside a FROM/JOIN
-        # position the scanner recognizes) surfaces from Spark as a
-        # confusing unresolved-function error; point at the real cause.
-        no_strings = re.sub(
-            r"'(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"",
-            lambda m: " " * len(m.group()),
-            _mask_comments(rewritten),
-        )
-        leftover = _NAME_RE.search(no_strings)
-        if leftover:
-            raise ValueError(
-                f"TVF call {leftover.group(1)!r}(...) at offset "
-                f"{leftover.start()} was not rewritten — sequila TVFs are "
-                f"only supported in FROM/JOIN positions (module docstring); "
-                f"Spark error: {e}"
-            ) from e
-        raise
+        for start, end, name, raw in calls:
+            args = _parse_args(raw, spark)
+            df = _TVFS[name](spark, args)
+            view = f"__sequila_tvf_{uuid.uuid4().hex}"
+            df.createOrReplaceTempView(view)
+            views.append(view)
+            pieces.append(query[last:start])
+            pieces.append(view)
+            last = end
+        pieces.append(query[last:])
+        rewritten = "".join(pieces)
+        try:
+            return spark.sql(rewritten)
+        except Exception as e:
+            # A TVF name left unrewritten (e.g. used outside a FROM/JOIN
+            # position the scanner recognizes) surfaces from Spark as a
+            # confusing unresolved-function error; point at the real cause.
+            no_strings = re.sub(
+                r"'(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"",
+                lambda m: " " * len(m.group()),
+                _mask_comments(rewritten),
+            )
+            leftover = _NAME_RE.search(no_strings)
+            if leftover:
+                raise ValueError(
+                    f"TVF call {leftover.group(1)!r}(...) at offset "
+                    f"{leftover.start()} was not rewritten — sequila TVFs "
+                    f"are only supported in FROM/JOIN positions (module "
+                    f"docstring); Spark error: {e}"
+                ) from e
+            raise
+    finally:
+        for view in views:
+            spark.catalog.dropTempView(view)

@@ -2285,13 +2285,13 @@ def test_cram_pileup_prunes_decode(spark, monkeypatch):
     got = sorted(map(tuple, pileup(reads).collect()))
     assert len(calls) == 1 and "qual" not in calls[0] and "tags" not in calls[0]
     unpruned = sorted(
-        map(tuple, pileup(reads.select(reads.columns)).collect())
-    )  # .select() drops provenance -> no pruning
+        map(tuple, pileup(reads, fuse=False).collect())
+    )  # fuse=False keeps the full decode
     assert got == unpruned
     got_q = sorted(map(tuple, pileup(reads, quals=True).collect()))
     assert "qual" in calls[-1]
     unpruned_q = sorted(
-        map(tuple, pileup(reads.select(reads.columns), quals=True).collect())
+        map(tuple, pileup(reads, quals=True, fuse=False).collect())
     )
     assert got_q == unpruned_q
 
@@ -2320,6 +2320,6 @@ def test_pileup_fuse_flag(spark, monkeypatch):
     assert calls["pruned"] == 1  # opt-out: no pruned re-read
     assert fused == unfused
     with pytest.raises(ValueError, match="fuse=True requires"):
-        pileup(reads.select(reads.columns), fuse=True)
+        pileup(reads.where("mapq >= 0"), fuse=True)  # a filter drops provenance
     with pytest.raises(ValueError, match="fuse=True requires"):
-        pileup(B.read_bam_native(spark, BAM), fuse=True)
+        pileup(B.read_bam_native(spark, BAM), quals=True, fuse=True)

@@ -61,6 +61,46 @@ def test_fasta_reader(spark):
     assert bases.count() == 30
 
 
+def test_fasta_bases_linear_against_numpy(spark, tmp_path):
+    """read_fasta_bases over 3 x 200 kb contigs with lowercase and N runs
+    and an empty contig equals a numpy truth: one uppercased row per base,
+    1-based positions, none for the empty contig."""
+    import numpy as np
+
+    from sequila_spark.sources import read_fasta_bases
+
+    rng = np.random.default_rng(7)
+    alphabet = np.frombuffer(b"ACGTacgtN", dtype=np.uint8)
+    seqs = {}
+    for name in ("chr1", "2", "X"):
+        s = alphabet[rng.integers(0, 9, 200_000)]
+        s[50_000:50_500] = ord("N")
+        seqs[name] = s.tobytes().decode()
+    path = tmp_path / "three.fa"
+    with open(path, "w") as fh:
+        for name, s in seqs.items():
+            fh.write(f">{name} description\n")
+            fh.writelines(s[i : i + 60] + "\n" for i in range(0, len(s), 60))
+        fh.write(">empty\n")
+    got = read_fasta_bases(spark, str(path))
+    assert [f.name for f in got.schema.fields] == ["contig", "pos", "ref"]
+    digest = got.groupBy("contig").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("pos").alias("lo"),
+        F.max("pos").alias("hi"),
+        F.sum(F.col("pos").cast("long") * F.ascii("ref")).alias("wsum"),
+        F.sum((F.col("ref") == "N").cast("int")).alias("ns"),
+    )
+    want = {}
+    for name, s in seqs.items():
+        up = np.frombuffer(s.upper().encode(), dtype=np.uint8).astype(np.int64)
+        pos = np.arange(1, len(up) + 1)
+        want[name.replace("chr", "")] = (
+            len(up), 1, len(up), int((pos * up).sum()), int((up == ord("N")).sum())
+        )
+    assert {r["contig"]: tuple(r)[1:] for r in digest.collect()} == want
+
+
 def test_vcf_reader(spark):
     from sequila_spark.sources import read_vcf
 
