@@ -400,8 +400,10 @@ def coverage(
     coverage_from_events) — same rows (pinned by
     tests/test_coverage.py), ~10x fewer shuffled rows, zero string
     rendering, the way the reference fuses coverage into its scan
-    (pileup/PileupStrategy.scala:37-56).  A filter or projection of the
-    reader relation drops the provenance.  ``fuse=False`` forces the
+    (pileup/PileupStrategy.scala:37-56).  A filter, or a projection that
+    changes the column list or its order, drops the provenance; an
+    identity projection (``reads.select(reads.columns)``) is the same plan
+    and keeps it.  ``fuse=False`` is the way to opt out: it forces the
     declarative plan; ``fuse=True`` raises if the relation has no reader
     provenance to fuse on.
     """
@@ -413,7 +415,7 @@ def coverage(
     from sequila_spark.planutil import reader_provenance
 
     csrc = reader_provenance(reads, "cram") if fuse is not False else None
-    if csrc is not None and csrc["columns"] is None:
+    if csrc is not None:
         if use_cigar is not False:
             # FULL CRAM fusion (r13): decode -> clipped coverage events
             # inside the container task — zero per-record strings, the

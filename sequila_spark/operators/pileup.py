@@ -525,8 +525,10 @@ def pileup(
     read_cram_native relation with provenance is re-read with only the
     columns pileup needs (no tag, qname or mate decode; qual only when
     quals/baq ask for it).  ``fuse=False`` keeps the plan over ``reads``
-    as given; ``fuse=True`` raises when neither applies.  Any filter or
-    projection of the reader relation drops the provenance.
+    as given, and is the way to opt out; ``fuse=True`` raises when neither
+    applies.  A filter, or a projection that changes the column list or
+    its order, drops the provenance; an identity projection
+    (``reads.select(reads.columns)``) is the same plan and keeps it.
     """
     from sequila_spark.operators.coverage import filter_reads
     from sequila_spark.planutil import reader_provenance
@@ -548,8 +550,6 @@ def pileup(
             bsrc = reader_provenance(reads, "bam")
         if bsrc is None:
             csrc = reader_provenance(reads, "cram")
-            if csrc is not None and csrc["columns"] is not None:
-                csrc = None
     if fuse is True and bsrc is None and csrc is None:
         raise ValueError(
             "fuse=True requires a read_bam_native relation (with a "

@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import json
 import threading
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame
 
@@ -41,11 +40,18 @@ def plan_stats(df: DataFrame) -> tuple[int | None, int | None]:
 # is recognised by plan, not by Python object: a temp view over the reader,
 # spark.table(view) and a ``SELECT *`` view all compare sameSemantics with
 # it, while a filter, a projection or another file does not.  The registry
-# holds the reader DataFrame, so provenance outlives the caller's own
-# reference; it keeps the most recent _READERS_MAX distinct reader calls.
-_READERS: OrderedDict = OrderedDict()
-_READERS_MAX = 16
+# holds the reader DataFrames, so provenance outlives the caller's own
+# reference.  Nothing expires while its session runs: a call that repeats
+# a registered relation (a repeated arrow reader call plans the same
+# relation) adds nothing, a distinct one (another file or arguments, or an
+# ``arrow=False`` call, whose RDD is new each time) adds one plan, and the
+# entries of a stopped session are dropped.
+_READERS: dict = {}  # (kind, args json) -> (args, [(df, columns)])
 _READERS_LOCK = threading.Lock()
+
+
+def _live(df: DataFrame) -> bool:
+    return df.sparkSession.sparkContext._jsc is not None
 
 
 def register_reader(kind: str, df: DataFrame, **args) -> DataFrame:
@@ -53,10 +59,13 @@ def register_reader(kind: str, df: DataFrame, **args) -> DataFrame:
     ``args`` (JSON-able reader arguments); returns ``df``."""
     key = (kind, json.dumps(args, sort_keys=True, default=str))
     with _READERS_LOCK:
-        _READERS.pop(key, None)
-        _READERS[key] = (args, df, tuple(df.columns))
-        while len(_READERS) > _READERS_MAX:
-            _READERS.popitem(last=False)
+        for k, (_, rels) in list(_READERS.items()):
+            rels[:] = [r for r in rels if _live(r[0])]
+            if not rels:
+                del _READERS[k]
+        rels = _READERS.setdefault(key, (args, []))[1]
+        if not any(df.sameSemantics(old) for old, _ in rels):
+            rels.append((df, tuple(df.columns)))
     return df
 
 
@@ -64,21 +73,14 @@ def reader_provenance(reads: DataFrame, kind: str) -> dict | None:
     """The arguments of the ``kind`` reader call whose relation ``reads``
     is semantically equal to (the reader's own rows, unfiltered and
     unprojected), or None."""
-    with _READERS_LOCK:
-        cands = [(k, v) for k, v in reversed(_READERS.items()) if k[0] == kind]
-    if not cands:
-        return None
     cols = tuple(reads.columns)
-    for key, (args, df, df_cols) in cands:
-        if df_cols != cols:
-            continue
-        try:
-            same = reads.sameSemantics(df)
-        except Exception:  # a reader of a stopped session
-            continue
-        if same:
-            with _READERS_LOCK:
-                if key in _READERS:
-                    _READERS.move_to_end(key)
+    with _READERS_LOCK:
+        cands = [
+            (args, df)
+            for k, (args, rels) in _READERS.items() if k[0] == kind
+            for df, df_cols in rels if df_cols == cols and _live(df)
+        ]
+    for args, df in reversed(cands):
+        if reads.sameSemantics(df):
             return args
     return None

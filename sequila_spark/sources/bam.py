@@ -503,7 +503,8 @@ def read_bam_native(
     ``SELECT *`` view (as the SQL ``coverage('v')``/``pileup('v')``
     functions do), plan the fused decode readers
     (read_bam_coverage_events, read_bam_pileup_counts) instead of
-    decoding every column.  A filter or projection of it does not."""
+    decoding every column.  A filter, or a projection that changes the
+    column list or its order, does not; ``fuse=False`` opts out."""
     from sequila_spark.sources import bamcodec as B
 
     refs_by_path, spans = _plan_bam_spans(path, chunk)
@@ -871,7 +872,12 @@ def read_cram_native(
     seq/cigar string slicing, qual phred translation — is skipped for
     columns not requested, and only the requested Arrow arrays ship to
     the JVM.  sample_id is always included; an interval filter requires
-    contig/pos_start/pos_end to be present."""
+    contig/pos_start/pos_end to be present.
+
+    A relation without ``columns`` is registered as reader provenance
+    (planutil.register_reader), as read_bam_native's is: ``coverage()``
+    and ``pileup()`` over it, or over a view of it, re-plan the decode;
+    a pruned relation is not registered."""
     from sequila_spark.sources import cramcodec as C
 
     meta_by_path, groups = _plan_cram_groups(spark, path, contig, start, end)
@@ -949,13 +955,15 @@ def read_cram_native(
         if start is not None:
             cond = cond & (F.col(S.END) >= F.lit(start))
         df = df.where(cond)
+    if columns is not None:
+        return df
     # reader provenance (as read_bam_native's): coverage() re-plans a
     # full-column relation, or any view of it, as the fused events reader,
     # and pileup() as a column-pruned re-read that skips qname/tags/qual
-    # rendering and transfer
+    # rendering and transfer; a pruned relation has nothing to fuse on
     return register_reader(
         "cram", df, path=path, ref_path=ref_path, with_tags=with_tags,
-        contig=contig, start=start, end=end, columns=columns,
+        contig=contig, start=start, end=end,
     )
 
 

@@ -793,6 +793,11 @@ def events_from_blocks(
 _PILEUP_BASES = pa.array(list(B.SEQ_CODES) + list(B.SEQ_CODES.lower()), pa.string())
 
 
+# bases expanded per step of _pileup_count_batch (bounds its per-base
+# arrays: an 8 MB batch of 150-bp reads holds about 4M bases)
+_MAX_BASES = 1 << 20
+
+
 def iter_span_pileup_counts(
     path: str,
     refs: list[tuple[str, int]],
@@ -802,7 +807,6 @@ def iter_span_pileup_counts(
     min_mapq: int = 0,
     strand_case: bool = False,
     batch_bytes: int = 8 << 20,
-    max_bases: int = 1 << 20,
 ):
     """Fused decode -> per-position base counts, aggregated per batch.
 
@@ -818,7 +822,7 @@ def iter_span_pileup_counts(
     operators.pileup completes the count per (contig, pos, base).
     ``flag_mask``/``min_mapq`` apply filter_reads' predicates at decode
     time.  Records without a reference id or with an empty seq (decoded
-    as a NULL seq) contribute nothing.  At most ``max_bases`` bases are
+    as a NULL seq) contribute nothing.  At most _MAX_BASES bases are
     expanded at a time, so the per-base numpy arrays stay bounded whatever
     ``batch_bytes`` is.  A record whose CIGAR consumes more query bases
     than its seq holds is invalid SAM and raises ValueError."""
@@ -826,13 +830,13 @@ def iter_span_pileup_counts(
     for u8, offs, h in _iter_kept_records(
         path, span, batch_bytes, flag_mask, min_mapq, with_seq=True
     ):
-        batch = _pileup_count_batch(u8, h, offs, ref_take, strand_case, max_bases)
+        batch = _pileup_count_batch(u8, h, offs, ref_take, strand_case)
         if batch is not None:
             yield batch
 
 
 def _pileup_count_batch(
-    u8, h, offs, ref_take, strand_case, max_bases
+    u8, h, offs, ref_take, strand_case
 ) -> pa.RecordBatch | None:
     """One batch's (contig, pos, base, cnt) rows (see
     iter_span_pileup_counts).  A key packs ``rid << 37 | pos << 5 |
@@ -870,8 +874,8 @@ def _pileup_count_batch(
     parts = []
     j0 = 0
     while j0 < len(blen):
-        # the next run of whole blocks holding at most max_bases bases
-        j1 = max(int(np.searchsorted(bcum, bcum[j0] + max_bases, "right")) - 1, j0 + 1)
+        # the next run of whole blocks holding at most _MAX_BASES bases
+        j1 = max(int(np.searchsorted(bcum, bcum[j0] + _MAX_BASES, "right")) - 1, j0 + 1)
         nb = blen[j0:j1]
         start = bcum[j0:j1] - bcum[j0]
         it = _iota(int(bcum[j1] - bcum[j0]))

@@ -275,14 +275,17 @@ def sequila_sql(spark: SparkSession, query: str) -> DataFrame:
     literals; arguments may be literals, or constant SQL expressions
     (including nested function calls), which Spark evaluates first.
 
-    Each call's relation is registered under a view name of its own and
-    dropped once the rewritten query is analyzed (the returned DataFrame
-    holds the analyzed plan), so concurrent calls on one session cannot
-    read each other's relations."""
+    Each call's relation is registered under a view name of its own, so
+    concurrent calls on one session cannot read each other's relations.
+    The views are dropped once a query is analyzed (the returned DataFrame
+    holds the analyzed plan).  A command (``CREATE TEMP VIEW v AS ...``,
+    ``CACHE TABLE t AS ...``) keeps them for the session: a temp view
+    stores its SQL text and resolves the names again on each read."""
     masked = _mask_comments(query)
     calls = _find_tvf_calls(masked)
     pieces = []
     views = []
+    keep = False
     last = 0
     try:
         for start, end, name, raw in calls:
@@ -297,7 +300,7 @@ def sequila_sql(spark: SparkSession, query: str) -> DataFrame:
         pieces.append(query[last:])
         rewritten = "".join(pieces)
         try:
-            return spark.sql(rewritten)
+            out = spark.sql(rewritten)
         except Exception as e:
             # A TVF name left unrewritten (e.g. used outside a FROM/JOIN
             # position the scanner recognizes) surfaces from Spark as a
@@ -316,6 +319,9 @@ def sequila_sql(spark: SparkSession, query: str) -> DataFrame:
                     f"docstring); Spark error: {e}"
                 ) from e
             raise
+        keep = out._jdf.logicalPlan().getClass().getSimpleName() == "CommandResult"
+        return out
     finally:
-        for view in views:
-            spark.catalog.dropTempView(view)
+        if not keep:
+            for view in views:
+                spark.catalog.dropTempView(view)

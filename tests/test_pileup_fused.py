@@ -143,7 +143,9 @@ def test_pileup_counts_ckern_batches_and_slices(slice_bam, cigar_bam, monkeypatc
         for kw in ({}, {"strand_case": True, "flag_mask": 1796, "min_mapq": 10}):
             base = _counts(path, **kw)
             assert base
-            assert _counts(path, batch_bytes=3_000, max_bases=7, **kw) == base
+            with monkeypatch.context() as m:
+                m.setattr(BV, "_MAX_BASES", 7)
+                assert _counts(path, batch_bytes=3_000, **kw) == base
             monkeypatch.setattr(_ckern, "_LIB", False)
             assert _counts(path, batch_bytes=3_000, **kw) == base
             monkeypatch.setattr(_ckern, "_LIB", None)

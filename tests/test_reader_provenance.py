@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import MapType
 
+from sequila_spark import planutil
 from sequila_spark.operators.coverage import coverage
 from sequila_spark.operators.pileup import pileup
 from sequila_spark.session import SequilaSession
@@ -113,6 +114,45 @@ def test_transformed_views_keep_dense_plan(spark, slice_bam):
     assert not cov_fused(cov) and not pile_fused(pile)
     assert rows(cov) == want_cov
     assert rows(pile) == want_pile
+
+
+def test_provenance_outlives_other_readers(spark, slice_bam):
+    """A reader view keeps its provenance however many other readers are
+    created after it, and an earlier ``arrow=False`` relation keeps its own
+    when the same call is repeated; a column-pruned CRAM relation, which
+    nothing can fuse on, is not registered."""
+    _register_view(spark, "prov_first", slice_bam)
+    scalar = read_bam_native(spark, slice_bam, arrow=False)
+    for chunk in range(2_000, 2_000 + 17 * 500, 500):
+        read_bam_native(spark, slice_bam, chunk=chunk)
+    again = read_bam_native(spark, slice_bam, arrow=False)
+    assert not scalar.sameSemantics(again)
+    gc.collect()
+    assert cov_fused(coverage(spark.table("prov_first")))
+    assert pile_fused(pileup(spark.table("prov_first")))
+    assert cov_fused(coverage(scalar)) and cov_fused(coverage(again))
+    n = len(planutil._READERS)
+    read_cram_native(spark, CRAM, columns=["flag", "contig", "pos_start", "pos_end"])
+    assert len(planutil._READERS) == n
+
+
+def test_sql_command_keeps_function_views(spark, slice_bam):
+    """A temp view created over a SQL table function stays readable after
+    later calls: its SQL text names the per-call view, which a command
+    keeps, while a query's per-call views are dropped."""
+    ss = SequilaSession(spark)
+    _register_view(spark, "prov_cmd", slice_bam)
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("__sequila_tvf_")}
+
+    before = views()
+    ss.sql("CREATE OR REPLACE TEMP VIEW prov_cov AS SELECT * FROM coverage('prov_cmd')")
+    ss.sql("SELECT * FROM coverage('prov_cmd')").count()
+    assert len(views() - before) == 1
+    want = rows(coverage(read_bam_native(spark, slice_bam), fuse=False))
+    assert rows(spark.table("prov_cov")) == want
+    assert rows(spark.sql("SELECT * FROM prov_cov")) == want
 
 
 def test_two_threads_own_views(spark, slice_bam, tmp_path):
